@@ -131,13 +131,6 @@ def _topk_rows(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _topk(pairs: DataFrame) -> DataFrame:
-    """Panel-grain exact top-k: ≤ ``ANN_QUERY_COUNT``·k rows by
-    construction → single-reducer ``report_sort`` (see ``_topk_rows``
-    for why not ``orderBy``)."""
-    return report_sort(_topk_rows(pairs), "query_id", "rank")
-
-
 def _exact_topk_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact brute-force baseline's top-k rows, UNSORTED — the arm
     every recall audit consumes (they aggregate, so the registered

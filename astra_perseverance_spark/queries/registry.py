@@ -4,69 +4,11 @@ Every declared query from SURVEY.md §2.10 (Q1–Q20) is registered here;
 each has a DuckDB oracle twin in ``oracle.sqls`` unless listed in
 ``NO_ORACLE`` (the driver then runs a rows-only check).
 
-ORDER MATTERS — driver-check rotation policy
---------------------------------------------
-The per-round driver oracle check covers the first 50 registry entries,
-and the registry holds more than 50 queries, so ordering decides which
-queries get a hard driver-side correctness row each round:
-
-1. The 22 SURVEY §2.10 parity queries always come first (the brief's
-   primary bar — they must be driver-green every round).
-2. Next: queries that have never had a driver row, or whose
-   implementation changed since their last driver-green round.
-3. Then the remaining actively-developed extension queries.
-4. Tail (positions > 50, no driver row this round): queries that are
-   multi-round driver-green with UNCHANGED code — still covered by the
-   local pytest oracle-parity gate (tests/test_oracle_parity.py
-   parametrizes the full registry) and the bench suite.
-
-Round-16 rotation (no new registrations — reorder only; r15, an
-optimization round, deliberately deferred its rotation, so when
-CORRECTNESS_r15 landed the 22 r12-green tail entries fell out of
-the K=3 freshness budget and tests/test_rotation.py went red at
-the start of r16 — this rotation is the inherited-state repair):
-
-* Into the window: the 22 queries whose last driver row is r12
-  (ann_recall_audit … user_skew_audit — already ordered at the
-  tail head for exactly this by the r14 plan), positions 23–44.
-* Positions 45–50: the 6 free slots pre-pay the next cliff with
-  the 6 oldest r13-green entries (dedup_span_trim …
-  events_window_attr).
-* To the tail: first the 22 remaining r13-green entries (due
-  next: events_next_error … quality_signals), then the 28
-  r15-green entries (repeated_lines … ann_ivf, freshest).
-
-Capacity policy (decided round-14, BEFORE the next registration)
-----------------------------------------------------------------
-The arithmetic: a 50-row window minus the 22 always-checked parity
-rows leaves 28 rotating slots per round; with the K=3 freshness
-budget at most 50 + 28×(K−1) = 50 + 56 = **106 queries** can all
-stay fresh (tests/test_rotation.py::test_window_is_at_least_half_
-the_registry enforces this bound).  The registry holds **100**, so
-exactly **6 registrations remain**.  The rule for spending them:
-
-1. Registrations #101–#106 are legal but each must displace one
-   pre-pay slot in its debut round (a new entry takes a window
-   position that would otherwise refresh an old one), so prefer
-   AT MOST TWO net-new registrations per round — the r13 cadence —
-   and only for operators that deepen a pipeline stage no existing
-   query exercises.
-2. From #107 the ceiling is hard: a new registration requires
-   retiring or merging an existing entry FIRST, in the same commit.
-   Pre-chosen merge candidates, narrowest overlap first:
-   ``corpus_sample`` + ``corpus_sample_fixed`` (same sampler, two
-   panel parameterizations — mergeable into one two-arm output) and
-   ``ann_recall_ivf_kmeans`` + ``ann_recall_ivf_pq`` (same recall
-   audit over two serving indexes — mergeable into one
-   index-labelled frame).  Raising K or widening the window is NOT
-   an option: K=3 is what makes a driver row meaningful, and the
-   window is the driver's contract, not ours to grow.
-
 Snapshot protocol (round-10, after two rounds of red snapshots): any
 commit that changes this registry, an oracle twin, or docs/ — and
 EVERY end-of-round snapshot — requires a green
 ``python tools/preflight.py`` first (the Spark-free gate subset:
-plan-audit doc staleness, rotation policy, registry↔oracle key sync,
+plan-audit doc staleness, registry↔oracle key sync,
 bench-artifact freshness; ~5 s, no Spark session).  The full gate
 sequence is ``python tools/preflight.py --full`` (preflight +
 tools/check.py full-registry oracle parity + pytest).  A snapshot
@@ -104,7 +46,7 @@ from astra_perseverance_spark.streaming import doc_stream, gc_stream
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERY_REGISTRY: dict[str, QueryFn] = {
-    # ---- Tier 1: SURVEY §2.10 parity queries (always checked) ----
+    # ---- SURVEY §2.10 parity queries ----
     # Q1-Q4, Q18, Q20-long — workload family
     "workload_reads": workload.q_workload_reads,
     "workload_writes": workload.q_workload_writes,
@@ -132,10 +74,8 @@ QUERY_REGISTRY: dict[str, QueryFn] = {
     # Findings framework + Q20 nested summary
     "warnings": warnings.q_warnings,
     "summary_json": summary.q_summary_json,
-    # ---- Tier 2: the 22 r12-green queries that fell out of the
-    # K=3 freshness budget when CORRECTNESS_r15 landed (r15, an
-    # optimization round, deliberately deferred this rotation) —
-    # r16 is their mandatory refresh round ----
+    # ---- extension and streaming queries; tests/test_oracle_parity.py
+    # checks every entry ----
     "ann_recall_audit": similarity.q_ann_recall_audit,
     "embedding_cosine_dups": similarity.q_embedding_cosine_dups,
     "embedding_dup_clusters": similarity.q_embedding_dup_clusters,
@@ -158,19 +98,12 @@ QUERY_REGISTRY: dict[str, QueryFn] = {
     "corpus_sample": pipeline.q_corpus_sample,
     "corpus_sample_fixed": pipeline.q_corpus_sample_fixed,
     "user_skew_audit": timeseries.q_user_skew_audit,
-    # ---- Tier 3: r17-cliff pre-pay — the 6 oldest r13-green
-    # entries take the window's remaining slots (same arithmetic
-    # as the r14 rotation: 22 due + 6 pre-paid = 28 slots) ----
     "dedup_span_trim": training.q_dedup_span_trim,
     "source_cross_dup": curation.q_source_cross_dup,
     "split_assign": training.q_split_assign,
     "events_asof": timeseries.q_events_asof,
     "events_asof_1h": timeseries.q_events_asof_1h,
     "events_window_attr": timeseries.q_events_window_attr,
-    # ---- Tail (>50) — first the 22 remaining r13-green entries
-    # (due next), then the 28 r15-green entries (freshest);
-    # all covered by the full-registry pytest oracle-parity
-    # gate + bench ----
     "events_next_error": timeseries.q_events_next_error,
     "events_funnel": timeseries.q_events_funnel,
     "ann_ivf_pq": similarity.q_ann_ivf_pq,
@@ -193,7 +126,6 @@ QUERY_REGISTRY: dict[str, QueryFn] = {
     "quality_filter": pipeline.q_quality_filter,
     "quality_report": curation.q_quality_report,
     "quality_signals": curation.q_quality_signals,
-    # r15-green (freshest; rotate back in after the r13 cohort)
     "repeated_lines": prep.q_repeated_lines,
     "script_profile": prep.q_script_profile,
     "seq_pack": training.q_seq_pack,

@@ -12,23 +12,24 @@ Parses the reference's input layout —
 every registered query runs unchanged over a real diag snapshot
 (``load_model`` routes here when the path contains ``nodes/``).
 
-Spark-first design:
+One read per input, one build per shared frame:
 
-- Order-sensitive small files (status, cfstats, gossipinfo, schema)
-  are read ``wholetext`` and ``posexplode``-split: one row per file →
-  line numbers are exact by construction, files parse in parallel,
-  and the carry-forward context (W1: current Keyspace/Table/DC/node
-  block) is a ``last(marker, ignorenulls=True)`` window partitioned
-  by file — never a cross-file shuffle.  Diag trees are thousands of
-  small files, the exact shape ``wholetext`` handles well; the only
-  potentially-large inputs are system.logs, which are line-local and
-  use a plain (splittable) ``read.text``.
-- Zip-compressed logs (S10/F6) come in through ``binaryFile`` + a
-  batched Arrow decompression (``mapInPandas``) — the one place
-  Python touches bytes, and it is per-file batched, not per-line.
-- All downstream math happens on the conformed tables, so parsing is
-  a one-pass projection; the reference's second cfstats scan
-  (explore.py:1424-1473) collapses into the cached fact.
+- Every nodetool/driver file the parsers use comes from ONE cached
+  ``wholetext`` scan (``_small_files``): a row per file, split by
+  ``posexplode`` so line numbers are exact, tagged with the file's
+  ``kind``.  Carry-forward context (W1: current Keyspace/Table/DC/node
+  block) is a ``last(marker, ignorenulls=True)`` window partitioned by
+  file — never a cross-file shuffle.  The reference's second cfstats
+  scan (explore.py:1424-1473) collapses into the cached fact.
+- ``system*.log`` files come from one splittable ``read.text`` scan,
+  zip archives (S10/F6) from ``binaryFile`` + a batched Arrow
+  decompression (``mapInPandas``, per file, not per line); only GC and
+  tombstone lines are kept, cached for both log facts.
+- ``load_model_from_diag`` builds the status rows, gossip blocks, node
+  map and schema lines once, hands them to the builders and runs no
+  Spark job.
+- ``cluster_name``, the only reader of ``describecluster``, makes its
+  own small read.
 
 Reference parity citations are per-function.  Known reference bugs
 are *not* reproduced; divergences are documented in SURVEY.md §8.
@@ -36,6 +37,7 @@ are *not* reproduced; divergences are documented in SURVEY.md §8.
 
 from __future__ import annotations
 
+import glob
 import io
 import os
 import zipfile
@@ -70,26 +72,19 @@ def _node_dir(path: Column) -> Column:
 
 def _expand_globs(globs: list[str]) -> list[str]:
     """Driver-side glob expansion (diag trees are local directories —
-    ``load_model`` routes here off ``os.path.isdir``).  Expanding on
-    the driver instead of handing Spark the raw patterns fixes a
-    silent data-loss mode: ``spark.read.text([g1, g2])`` raises
-    PATH_NOT_FOUND when ANY one glob matches nothing (e.g. an
-    AdditionalLogs tree that exists but holds no cassandra logs), and
-    the except-empty fallback then dropped the lines of EVERY other
-    glob too."""
-    import glob as _glob
-
-    return [p for g in globs for p in sorted(_glob.glob(g))
+    ``load_model`` routes here off ``os.path.isdir``): Spark's
+    ``read.text([g1, g2])`` raises PATH_NOT_FOUND when ANY one glob
+    matches nothing, which would drop the lines of every other glob."""
+    return [p for g in globs for p in sorted(glob.glob(g))
             if os.path.isfile(p)]
 
 
-def _file_lines(spark: SparkSession, globs: list[str]) -> DataFrame:
+def _file_lines(spark: SparkSession, paths: list[str]) -> DataFrame:
     """(node_dir, path, line_no, line) with exact in-file ordering.
 
     ``wholetext`` keeps each file a single row — line_no comes from
     ``posexplode`` of the split, not from partition-unstable ids
     (SURVEY.md §4.2.2)."""
-    paths = _expand_globs(globs)
     if not paths:
         return spark.createDataFrame(
             [], "node_dir string, path string, line_no long, line string"
@@ -103,6 +98,29 @@ def _file_lines(spark: SparkSession, globs: list[str]) -> DataFrame:
         .withColumn("node_dir", _node_dir(F.col("path")))
         .select("node_dir", "path", "line_no", F.col("line").alias("line"))
     )
+
+
+# every nodetool file a parser reads
+_NODETOOL_FILES = ("status", "gossipinfo", "info", "version", "cfstats",
+                   "tablestats", "proxyhistograms")
+
+
+def _small_files(spark: SparkSession, root: str) -> DataFrame:
+    """(node_dir, path, line_no, line, kind) of every small file the
+    parsers read, in one ``wholetext`` scan: the nodetool files and the
+    first node's schema dump (the reference reads exactly one,
+    explore.py:722-740).  ``kind`` is the file name, with
+    ``tablestats`` folded into ``cfstats`` (explore.py:900-903)."""
+    paths = _expand_globs([f"{root}/nodes/*/nodetool/{f}" for f in _NODETOOL_FILES])
+    paths += _expand_globs([f"{root}/nodes/*/driver/schema"])[:1]
+    lines = _file_lines(spark, paths)
+    name = F.regexp_extract("path", r"/([^/]+)$", 1)
+    kind = F.when(name == "tablestats", "cfstats").otherwise(name)
+    return lines.withColumn("kind", kind)
+
+
+def _kind(small: DataFrame, kind: str) -> DataFrame:
+    return small.filter(F.col("kind") == kind)
 
 
 def _carry(marker: Column, order: str = "line_no") -> Column:
@@ -129,11 +147,11 @@ def _after_colon(line: Column, n: int = 1) -> Column:
 # S1: node discovery + S3 status + S4 info + S6 gossip + S7 version
 # ---------------------------------------------------------------------------
 
-def status_rows(spark: SparkSession, root: str) -> DataFrame:
+def status_rows(small: DataFrame) -> DataFrame:
     """Per-node status rows (ip, dc, load_str, tokens, rack) with the
     DC carried forward from ``Datacenter:`` headers
     (explore.py:274-306).  Deduped across the per-node copies."""
-    lines = _file_lines(spark, [f"{root}/nodes/*/nodetool/status"])
+    lines = _kind(small, "status")
     dc_marker = F.when(
         F.col("line").contains("Datacenter:"), _after_colon(F.col("line"))
     )
@@ -157,7 +175,7 @@ def status_rows(spark: SparkSession, root: str) -> DataFrame:
     ).select("ip", "s.dc", "s.load_str", "s.tokens", "s.rack")
 
 
-def gossip_blocks(spark: SparkSession, root: str) -> DataFrame:
+def gossip_blocks(small: DataFrame) -> DataFrame:
     """Per-endpoint gossip state: (ip, dc, workload, version_dse).
 
     Block start = a line containing '/' (explore.py:666-671, endpoint
@@ -168,7 +186,7 @@ def gossip_blocks(spark: SparkSession, root: str) -> DataFrame:
     carry bug not reproduced): each endpoint uses its own payload;
     'Cassandra' renames to 'DSE Core'; graph appends ' + Graph';
     missing dse_version → 'DSE pre 5.0'."""
-    lines = _file_lines(spark, [f"{root}/nodes/*/nodetool/gossipinfo"])
+    lines = _kind(small, "gossipinfo")
     ip_marker = F.when(
         F.col("line").contains("/"),
         F.regexp_extract("line", rf"({IP_RE})", 1),
@@ -214,16 +232,18 @@ def _param_per_node(lines: DataFrame, contains: str, alias: str) -> DataFrame:
     )
 
 
-def node_map(spark: SparkSession, root: str) -> DataFrame:
-    """S1 node discovery: (node_dir, node, ip).
+def node_map(small: DataFrame, status: DataFrame) -> DataFrame:
+    """S1 node discovery: (node_dir, node, ip, dc).
 
     node = IP embedded in the dirname, else the dirname itself
     (extract_ip, explore.py:242-247, 596-598); ip resolved against
     status with ``_``/``-`` → ``.`` substitutions (explore.py:602-609)
     and falling back to a gossip endpoint line containing the node
-    name (find_ip_addr, explore.py:251-263)."""
+    name (find_ip_addr, explore.py:251-263) — one left join that only
+    unresolved dirs can match, so building the map runs no job.  dc
+    comes from status: a dir whose ip status does not list is no node."""
     dirs = (
-        _file_lines(spark, [f"{root}/nodes/*/nodetool/status"])
+        _kind(small, "status")
         .select("node_dir").distinct()
         .withColumn(
             "node",
@@ -233,60 +253,45 @@ def node_map(spark: SparkSession, root: str) -> DataFrame:
             ).otherwise(F.col("node_dir")),
         )
     )
-    st_ips = status_rows(spark, root).select("ip")
-    by_status = (
+    endpoints = (
+        _kind(small, "gossipinfo")
+        .select("line", F.regexp_extract("line", rf"/({IP_RE})", 1).alias("g_ip"))
+        .filter(F.col("g_ip") != "")
+    )
+    ips = (
         dirs.join(
-            F.broadcast(st_ips),
+            F.broadcast(status.select("ip")),
             (F.col("ip") == F.col("node"))
             | (F.col("ip") == F.regexp_replace("node", "_", "."))
             | (F.col("ip") == F.regexp_replace("node", "-", ".")),
             "left",
         )
-    )
-    resolved = by_status.filter(F.col("ip").isNotNull())
-    unresolved = by_status.filter(F.col("ip").isNull()).drop("ip")
-    if unresolved.isEmpty():
-        return resolved
-    gossip_lines = _file_lines(spark, [f"{root}/nodes/*/nodetool/gossipinfo"])
-    hits = (
-        unresolved.join(
-            gossip_lines.select("line").distinct(),
-            F.col("line").contains(F.col("node")) & F.col("line").contains("/"),
-        )
-        .select(
-            "node_dir", "node",
-            F.regexp_extract("line", rf"/({IP_RE})", 1).alias("ip"),
-        )
-        .filter(F.col("ip") != "")
+        .join(F.broadcast(endpoints),
+              F.col("ip").isNull() & F.col("line").contains(F.col("node")), "left")
         .groupBy("node_dir", "node")
-        .agg(F.min("ip").alias("ip"))
+        .agg(F.coalesce(F.min("ip"), F.min("g_ip")).alias("ip"))
     )
-    return resolved.unionByName(hits)
+    return (
+        ips.join(F.broadcast(status.select("ip", "dc")), "ip")
+        .select("node_dir", "node", "ip", "dc")
+    )
 
 
-def build_node_info(spark: SparkSession, root: str) -> DataFrame:
+def build_node_info(small: DataFrame, status: DataFrame, gossip: DataFrame,
+                    nodes: DataFrame) -> DataFrame:
     """node_info dim: status + info + gossip + version joined on ip
     (explore.py:296-301, 674-712, 904).  Non-DSE nodes report
     'OSS Cassandra' + the version-file release (explore.py:266-271,
     707-711)."""
-    nm = node_map(spark, root)
-    st = status_rows(spark, root)
-    info_lines = _file_lines(spark, [f"{root}/nodes/*/nodetool/info"])
-    uptime = _param_per_node(info_lines, "Uptime", "uptime_str")
-    ver_lines = _file_lines(spark, [f"{root}/nodes/*/nodetool/version"])
-    oss_ver = _param_per_node(ver_lines, "ReleaseVersion", "oss_version")
-    gs = gossip_blocks(spark, root)
+    uptime = _param_per_node(_kind(small, "info"), "Uptime", "uptime_str")
+    oss_ver = _param_per_node(_kind(small, "version"), "ReleaseVersion", "oss_version")
     return (
-        nm.join(F.broadcast(st), "ip")
+        nodes.join(F.broadcast(status.drop("dc")), "ip")
         .join(F.broadcast(uptime), "node_dir", "left")
         .join(F.broadcast(oss_ver), "node_dir", "left")
-        .join(F.broadcast(gs.select("ip", "workload", "version_dse")), "ip", "left")
+        .join(F.broadcast(gossip.select("ip", "workload", "version_dse")), "ip", "left")
         .select(
-            F.col("node"),
-            F.col("dc"),
-            F.col("rack"),
-            F.col("load_str"),
-            F.col("tokens"),
+            "node", "dc", "rack", "load_str", "tokens",
             F.col("uptime_str").cast("long").alias("uptime_sec"),
             F.coalesce(F.col("workload"), F.lit("OSS Cassandra")).alias("workload"),
             F.coalesce(F.col("version_dse"), F.col("oss_version")).alias("version"),
@@ -296,7 +301,7 @@ def build_node_info(spark: SparkSession, root: str) -> DataFrame:
 
 def cluster_name(spark: SparkSession, root: str) -> str:
     """S5 describecluster → cluster name (explore.py:645-646)."""
-    lines = _file_lines(spark, [f"{root}/nodes/*/nodetool/describecluster"])
+    lines = _file_lines(spark, _expand_globs([f"{root}/nodes/*/nodetool/describecluster"]))
     row = (
         lines.filter(F.col("line").contains("Name:"))
         .select(_after_colon(F.col("line")).alias("name"))
@@ -310,17 +315,14 @@ def cluster_name(spark: SparkSession, root: str) -> str:
 # S2: cfstats / tablestats
 # ---------------------------------------------------------------------------
 
-def build_cfstats_metric(spark: SparkSession, root: str) -> DataFrame:
+def build_cfstats_metric(small: DataFrame, nodes: DataFrame) -> DataFrame:
     """Long-format cfstats fact via the W1 carry-forward window
     (explore.py:899-998 agg pass; 1424-1473 tab pass — one scan here
     feeds both).  Handles the ``tablestats`` fallback
     (explore.py:900-903), legacy ``Column Family:`` (929-931) and
     ``Table (index):`` (926-928) labels, and keyspace-less preamble
     metrics (``Total number of tables`` → ks = tbl = '')."""
-    lines = _file_lines(
-        spark,
-        [f"{root}/nodes/*/nodetool/cfstats", f"{root}/nodes/*/nodetool/tablestats"],
-    ).withColumn("line", _strip(F.col("line")))
+    lines = _kind(small, "cfstats").withColumn("line", _strip(F.col("line")))
     ks_marker = F.when(
         F.col("line").rlike(r"^Keyspace\s*:"), _after_colon(F.col("line"))
     )
@@ -352,11 +354,8 @@ def build_cfstats_metric(spark: SparkSession, root: str) -> DataFrame:
         # every threshold comparison downstream goes silently false
         .filter(F.col("value").isNotNull() & ~F.isnan("value"))
     )
-    nm = node_map(spark, root)
-    st = status_rows(spark, root).select("ip", "dc")
     return (
-        rows.join(F.broadcast(nm), "node_dir")
-        .join(F.broadcast(st), "ip")
+        _with_node_dc(rows, nodes)
         .groupBy("node", "dc", "ks", "tbl", "metric")
         .agg(F.sum("value").cast("double").alias("value"))
     )
@@ -366,19 +365,11 @@ def build_cfstats_metric(spark: SparkSession, root: str) -> DataFrame:
 # S9: CQL schema DDL
 # ---------------------------------------------------------------------------
 
-def _schema_lines(spark: SparkSession, root: str) -> DataFrame:
-    """First node's schema dump (the reference reads exactly one,
-    explore.py:722-740); statements are blank-line delimited."""
-    lines = _file_lines(spark, [f"{root}/nodes/*/driver/schema"])
-    first = lines.select(F.min("path").alias("path"))
-    return lines.join(F.broadcast(first), "path").withColumn("line", _strip(F.col("line")))
-
-
-def build_keyspace_rf(spark: SparkSession, root: str) -> DataFrame:
+def build_keyspace_rf(schema: DataFrame, status: DataFrame) -> DataFrame:
     """(dc, ks, rf) from CREATE KEYSPACE replication maps
     (explore.py:744-785): NTS per-DC entries keyed by known DC names;
     SimpleStrategy ``replication_factor`` applies to every DC."""
-    ksl = _schema_lines(spark, root).filter(F.col("line").contains("CREATE KEYSPACE"))
+    ksl = schema.filter(F.col("line").contains("CREATE KEYSPACE"))
     # IF NOT EXISTS normalization (see build_schema_objects): the ks
     # name is token 2 of the normalized statement
     ddl = F.regexp_replace(F.col("line"), r"IF NOT EXISTS\s+", "")
@@ -392,7 +383,7 @@ def build_keyspace_rf(spark: SparkSession, root: str) -> DataFrame:
         F.regexp_extract("pair", r"'([^']+)'", 1).alias("key"),
         F.regexp_extract("pair", r":\s*'([0-9.]+)'", 1).cast("double").alias("rf_d"),
     )
-    dcs = status_rows(spark, root).select("dc").distinct()
+    dcs = status.select("dc").distinct()
     named = pairs.join(F.broadcast(dcs), pairs.key == dcs.dc).select(
         "dc", "ks", F.col("rf_d").cast("int").alias("rf")
     )
@@ -408,12 +399,7 @@ def _obj_name(line: Column, idx: int) -> Column:
     return F.regexp_replace(F.split(line, r"\s+")[idx], '"', "")
 
 
-def _split_qualified(name: Column) -> tuple[Column, Column]:
-    parts = F.split(name, r"\.")
-    return parts[0], parts[1]
-
-
-def build_schema_objects(spark: SparkSession, root: str) -> DataFrame:
+def build_schema_objects(schema: DataFrame) -> DataFrame:
     """schema_object catalog (ks, name, obj_type, src_ks, src_tbl)
     from the DDL statements (explore.py:786-874):
 
@@ -425,7 +411,6 @@ def build_schema_objects(spark: SparkSession, root: str) -> DataFrame:
     - UDF: ``CREATE [OR REPLACE] FUNCTION``; UDA: ``CREATE AGGREGATE
       [IF NOT EXISTS]`` (explore.py:809-838; all collected — the
     reference's last-one-wins warning bug B2 is not reproduced)."""
-    sl = _schema_lines(spark, root)
     line = F.col("line")
     # token indices are over the IF-NOT-EXISTS-normalized line: any
     # CREATE statement may carry the clause (driver-generated dumps
@@ -435,7 +420,7 @@ def build_schema_objects(spark: SparkSession, root: str) -> DataFrame:
     ks_ctx_marker = F.when(
         line.contains("CREATE KEYSPACE"), _obj_name(ddl, 2)
     )
-    sl = sl.withColumn("cur_ks", _carry(ks_ctx_marker))
+    sl = schema.withColumn("cur_ks", _carry(ks_ctx_marker))
 
     tbl_name = F.when(line.contains("CREATE TABLE"), _obj_name(ddl, 2))
     type_name = F.when(line.contains("CREATE TYPE"), _obj_name(ddl, 2))
@@ -474,17 +459,15 @@ def build_schema_objects(spark: SparkSession, root: str) -> DataFrame:
 
     def on_clause(n: Column, obj_type: str) -> DataFrame:
         return (
-            sl.select(n.alias("name_raw"), "cur_ks", "line")
-            .filter(F.col("name_raw").isNotNull())
+            sl.select(n.alias("name"), "line")
+            .filter(F.col("name").isNotNull())
             .select(
                 F.regexp_extract("line", r"ON\s+\"?(\w+)\"?\.", 1).alias("src_ks"),
                 F.regexp_extract("line", r"ON\s+\"?\w+\"?\.\"?(\w+)\"?", 1).alias("src_tbl"),
-                F.col("name_raw").alias("name"),
+                "name",
             )
-            .select(
-                F.col("src_ks").alias("ks"), "name",
-                F.lit(obj_type).alias("obj_type"), "src_ks", "src_tbl",
-            )
+            .select(F.col("src_ks").alias("ks"), "name",
+                    F.lit(obj_type).alias("obj_type"), "src_ks", "src_tbl")
         )
 
     idxs = on_clause(idx_name, "Index")
@@ -513,7 +496,7 @@ def build_schema_objects(spark: SparkSession, root: str) -> DataFrame:
         .unionByName(mvs).unionByName(funcs)
 
 
-def build_schema_columns(spark: SparkSession, root: str) -> DataFrame:
+def build_schema_columns(schema: DataFrame) -> DataFrame:
     """schema_column (ks, tbl, col, cql_type, kind) from CREATE
     TABLE / TYPE bodies (explore.py:856-874).
 
@@ -522,7 +505,6 @@ def build_schema_columns(spark: SparkSession, root: str) -> DataFrame:
     PRIMARY KEY clause (explore.py:864-871): inline ``PRIMARY KEY``
     marks the partition key; ``PRIMARY KEY (a, b, …)`` → a partition,
     rest clustering; ``PRIMARY KEY ((a, b), c)`` → composite."""
-    sl = _schema_lines(spark, root)
     line = F.col("line")
     # same IF-NOT-EXISTS normalization as build_schema_objects — the
     # block key must be the real ks.tbl, never the token 'IF'
@@ -536,7 +518,7 @@ def build_schema_columns(spark: SparkSession, root: str) -> DataFrame:
             F.lit(""),
         )
     )
-    ctx = sl.withColumn("cur_blk", F.coalesce(_carry(blk_marker), F.lit("")))
+    ctx = schema.withColumn("cur_blk", F.coalesce(_carry(blk_marker), F.lit("")))
     body = ctx.filter(
         (F.col("cur_blk") != "")
         & ~line.contains("CREATE")
@@ -609,19 +591,16 @@ def _unzip_lines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def _log_lines(spark: SparkSession, root: str) -> DataFrame:
-    """All system*.log lines across nodes, zip archives included
-    (explore.py:1024-1066 glob; 311-316 zip).  The optional
+    """(node_dir, line) of the GC and tombstone lines of every
+    system*.log, zip archives included (explore.py:1024-1066 glob;
+    311-316 zip), in one scan.  The optional
     ``AdditionalLogs/<node>/var/log/cassandra`` side tree
     (explore.py:1048-1066) is unioned in when present; its node dir is
     extracted from the AdditionalLogs path segment instead of nodes/."""
-    globs = [f"{root}/nodes/*/logs/cassandra/*"]
-    if os.path.isdir(os.path.join(root, "AdditionalLogs")):
-        globs.append(f"{root}/AdditionalLogs/*/var/log/cassandra/*")
-    # driver-side split: zips must never be scanned as text (the old
-    # pathGlobFilter approach still READ every archive once as garbage
-    # text rows before the filter dropped them — 2x the bytes), and a
-    # matchless glob must not empty the others (_expand_globs)
-    paths = _expand_globs(globs)
+    # driver-side split: a zip scanned as text is read twice, once as
+    # garbage rows; a matchless glob must not empty the others
+    paths = _expand_globs([f"{root}/nodes/*/logs/cassandra/system*",
+                           f"{root}/AdditionalLogs/*/var/log/cassandra/system*"])
     txt_paths = [p for p in paths if not p.endswith(".zip")]
     zip_paths = [p for p in paths if p.endswith(".zip")]
     if txt_paths:
@@ -644,23 +623,22 @@ def _log_lines(spark: SparkSession, root: str) -> DataFrame:
         F.regexp_extract("path", r"AdditionalLogs/([^/]+)/", 1),
     ).otherwise(_node_dir(F.col("path")))
     return (
-        text.withColumn("node_dir", node_dir)
-        .filter(F.regexp_extract("path", r"/(system[^/]*)$", 1) != "")
+        text.filter(F.col("line").contains("GCInspector.java:")
+                    | F.col("line").contains("tombstone cells"))
+        .select(node_dir.alias("node_dir"), "line")
     )
 
 
-def _with_node_dc(df: DataFrame, spark: SparkSession, root: str) -> DataFrame:
-    nm = node_map(spark, root)
-    st = status_rows(spark, root).select("ip", "dc")
-    return df.join(F.broadcast(nm), "node_dir").join(F.broadcast(st), "ip")
+def _with_node_dc(df: DataFrame, nodes: DataFrame) -> DataFrame:
+    return df.join(F.broadcast(nodes.drop("ip")), "node_dir")
 
 
-def build_gc_event(spark: SparkSession, root: str) -> DataFrame:
+def build_gc_event(logs: DataFrame, nodes: DataFrame) -> DataFrame:
     """gc_event (node, dc, ts, pause_ms) from GCInspector lines
     (parseGC_TS, explore.py:317-341).  ts is minute-truncated — the
     reference drops seconds before julian conversion
     (explore.py:326-329); tz fixed UTC (explore.py:1042)."""
-    gc = _log_lines(spark, root).filter(F.col("line").contains("GCInspector.java:"))
+    gc = logs.filter(F.col("line").contains("GCInspector.java:"))
     rows = gc.select(
         "node_dir",
         F.to_timestamp(
@@ -669,16 +647,16 @@ def build_gc_event(spark: SparkSession, root: str) -> DataFrame:
         ).alias("ts"),
         F.regexp_extract("line", r"GC in\s*(\d+)ms", 1).cast("int").alias("pause_ms"),
     ).filter(F.col("pause_ms").isNotNull() & F.col("ts").isNotNull())
-    return _with_node_dc(rows, spark, root).select("node", "dc", "ts", "pause_ms")
+    return _with_node_dc(rows, nodes).select("node", "dc", "ts", "pause_ms")
 
 
-def build_tombstone_event(spark: SparkSession, root: str) -> DataFrame:
+def build_tombstone_event(logs: DataFrame, nodes: DataFrame) -> DataFrame:
     """tombstone_event from tombstone-warning lines
     (explore.py:342-357).  Handles both 'live rows and' and 'live
     and' phrasings; ks.tbl from the query clause.  All events are
     emitted — the tp_ts ≥ 1000 gate is applied by Q14, not the
     parser (the reference filters at parse time as a shortcut)."""
-    tl = _log_lines(spark, root).filter(F.col("line").contains("tombstone cells"))
+    tl = logs.filter(F.col("line").contains("tombstone cells"))
     rows = tl.select(
         "node_dir",
         F.coalesce(
@@ -692,7 +670,7 @@ def build_tombstone_event(spark: SparkSession, root: str) -> DataFrame:
         F.regexp_extract("line", r"for query\s+.*?(\w+)\.(\w+)", 1).alias("ks"),
         F.regexp_extract("line", r"for query\s+.*?(\w+)\.(\w+)", 2).alias("tbl"),
     ).filter(F.col("ks") != "")
-    return _with_node_dc(rows, spark, root).select(
+    return _with_node_dc(rows, nodes).select(
         "node", "dc", "ks", "tbl", "live_rows", "tombstones"
     )
 
@@ -701,13 +679,13 @@ def build_tombstone_event(spark: SparkSession, root: str) -> DataFrame:
 # S8: proxyhistograms
 # ---------------------------------------------------------------------------
 
-def build_proxyhistogram(spark: SparkSession, root: str) -> DataFrame:
+def build_proxyhistogram(small: DataFrame, nodes: DataFrame) -> DataFrame:
     """proxyhistogram (node, dc, pct, read_us, write_us) from the
     whitespace table (explore.py:1494-1509).  Unparsable values → 0.0;
     nodes without the file are simply absent (Q6 omits them)."""
-    lines = _file_lines(spark, [f"{root}/nodes/*/nodetool/proxyhistograms"])
     rows = (
-        lines.withColumn("line", _strip(F.col("line")))
+        _kind(small, "proxyhistograms")
+        .withColumn("line", _strip(F.col("line")))
         .filter(F.col("line").rlike(r"^(Min|Max|\d+%)\s"))
         .select(
             "node_dir",
@@ -720,7 +698,7 @@ def build_proxyhistogram(spark: SparkSession, root: str) -> DataFrame:
             F.coalesce(F.col("v")[2].try_cast("double"), F.lit(0.0)).alias("write_us"),
         )
     )
-    return _with_node_dc(rows, spark, root).select(
+    return _with_node_dc(rows, nodes).select(
         "node", "dc", "pct", "read_us", "write_us"
     )
 
@@ -729,16 +707,14 @@ def build_proxyhistogram(spark: SparkSession, root: str) -> DataFrame:
 # model assembly
 # ---------------------------------------------------------------------------
 
-def build_missing_node(spark: SparkSession, root: str) -> DataFrame:
+def build_missing_node(status: DataFrame, gossip: DataFrame,
+                       nodes: DataFrame) -> DataFrame:
     """'Missing Node Data' anti-join (explore.py:302-304, 683-686):
     IPs present in status or gossip endpoint lines with no resolved
     node directory — a broadcast left-anti join against the node map."""
-    st_ips = status_rows(spark, root).select("ip")
-    gs_ips = gossip_blocks(spark, root).select("ip")
-    known = node_map(spark, root).select("ip")
     return (
-        st_ips.unionByName(gs_ips).distinct()
-        .join(F.broadcast(known), "ip", "left_anti")
+        status.select("ip").unionByName(gossip.select("ip")).distinct()
+        .join(F.broadcast(nodes.select("ip")), "ip", "left_anti")
     )
 
 
@@ -747,15 +723,26 @@ def load_model_from_diag(spark: SparkSession, root: str) -> ConformedModel:
 
     The returned model is interchangeable with the synthetic one —
     every registered query runs on it unchanged (``load_model`` routes
-    here when ``root`` contains a ``nodes/`` directory)."""
+    here when ``root`` contains a ``nodes/`` directory).  No Spark job
+    runs until a table is forced.  The two scans and the node map are
+    cached; status, gossip and the schema lines are cheap to recompute
+    and stay uncached, because each action's plan description repeats
+    every cached plan it reads and fewer cached layers keep it small."""
+    small = _small_files(spark, root).cache()
+    logs = _log_lines(spark, root).cache()
+    status = status_rows(small)
+    gossip = gossip_blocks(small)
+    nodes = node_map(small, status).cache()
+    # blank-line delimited DDL statements of the one schema dump read
+    schema = _kind(small, "schema").withColumn("line", _strip(F.col("line")))
     return ConformedModel(
-        missing_node=build_missing_node(spark, root),
-        node_info=build_node_info(spark, root),
-        keyspace_rf=build_keyspace_rf(spark, root),
-        schema_object=build_schema_objects(spark, root),
-        schema_column=build_schema_columns(spark, root),
-        cfstats_metric=build_cfstats_metric(spark, root),
-        gc_event=build_gc_event(spark, root),
-        tombstone_event=build_tombstone_event(spark, root),
-        proxyhistogram=build_proxyhistogram(spark, root),
+        missing_node=build_missing_node(status, gossip, nodes),
+        node_info=build_node_info(small, status, gossip, nodes),
+        keyspace_rf=build_keyspace_rf(schema, status),
+        schema_object=build_schema_objects(schema),
+        schema_column=build_schema_columns(schema),
+        cfstats_metric=build_cfstats_metric(small, nodes),
+        gc_event=build_gc_event(logs, nodes),
+        tombstone_event=build_tombstone_event(logs, nodes),
+        proxyhistogram=build_proxyhistogram(small, nodes),
     ).cache()

@@ -228,36 +228,94 @@ class TestCassandraConnectorSource:
             assert t in src
 
 
+def _copy_fixture(tmp_path, name="diag"):
+    import shutil
+
+    dst = str(tmp_path / name)
+    shutil.copytree(FIXTURE_DIAG, dst)
+    return dst
+
+
+def _file_scans(jvm, plan, via=None, out=None):
+    """(cache, paths) for every file scan in a physical plan: ``cache``
+    identifies the cached relation the scan sits under (None when the
+    plan reads the files directly)."""
+    out = [] if out is None else out
+    name = plan.getClass().getSimpleName()
+    if name == "FileSourceScanExec":
+        paths = plan.relation().location().rootPaths()
+        out.append((via, [paths.apply(i).toString() for i in range(paths.size())]))
+        return out
+    if name == "InMemoryTableScanExec":
+        rel = plan.relation()
+        kids = [rel.cachedPlan()]
+        via = jvm.System.identityHashCode(rel.cacheBuilder())
+    elif name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    else:
+        seq = plan.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    for k in kids:
+        _file_scans(jvm, k, via, out)
+    return out
+
+
+class TestOneRead:
+    """Each input of a diag tree is read once: building the model runs
+    no job, and the conformed tables share one cached scan of the
+    small files and one of the logs."""
+
+    def test_load_runs_no_job(self, spark, tmp_path):
+        from astra_perseverance_spark.sources.diag import load_model_from_diag
+
+        root = _copy_fixture(tmp_path)
+        sc = spark.sparkContext
+        sc.setJobGroup("diag-load-no-job", "load_model_from_diag")
+        try:
+            load_model_from_diag(spark, root)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("diag-load-no-job")) == []
+
+    def test_tables_share_one_cached_scan_per_input(self, spark, tmp_path):
+        from astra_perseverance_spark.sources.diag import load_model_from_diag
+
+        m = load_model_from_diag(spark, _copy_fixture(tmp_path))
+        scans = []
+        for t in ("node_info", "keyspace_rf", "schema_object", "schema_column",
+                  "cfstats_metric", "gc_event", "tombstone_event", "proxyhistogram"):
+            rel = getattr(m, t)._jdf.queryExecution().optimizedPlan()
+            assert rel.getClass().getSimpleName() == "InMemoryRelation", t
+            scans += _file_scans(spark._jvm, rel.cachedPlan())
+        small = {via for via, paths in scans
+                 if any("/nodetool/" in p or "/driver/" in p for p in paths)}
+        logs = {via for via, paths in scans if any("/system" in p for p in paths)}
+        assert len(small) == 1 and None not in small, scans
+        assert len(logs) == 1 and None not in logs, scans
+
+
 class TestDiagRobustness:
-    """Round-11 review findings: real-world diag trees that used to
-    poison or silently empty the parse, each built by doctoring a
-    copy of the checked-in fixture."""
-
-    @staticmethod
-    def _copy_fixture(tmp_path):
-        import shutil
-
-        dst = str(tmp_path / "diag")
-        shutil.copytree(FIXTURE_DIAG, dst)
-        return dst
+    """Real-world diag trees that used to poison or silently empty the
+    parse, each built by doctoring its own copy of the checked-in
+    fixture and parsed by a fresh load, so no frame cached from
+    another tree can answer."""
 
     def test_nan_latency_does_not_poison_sums(self, spark, tmp_path):
         """nodetool prints 'Local read latency: NaN ms' for idle
         tables; try_cast gives double NaN (not null), and one NaN row
         used to turn the per-table SUM into NaN — every threshold
         comparison downstream silently false."""
-        from astra_perseverance_spark.sources.diag import (
-            build_cfstats_metric,
-        )
+        from astra_perseverance_spark.sources.diag import load_model_from_diag
 
-        root = self._copy_fixture(tmp_path)
+        root = _copy_fixture(tmp_path)
         cf = f"{root}/nodes/10.1.0.1/nodetool/cfstats"
         with open(cf, "a") as fh:
             fh.write("\nKeyspace : shop\n\t\tTable: orders\n"
                      "\t\tLocal read latency: NaN ms\n")
         vals = {
             (r["ks"], r["tbl"], r["metric"]): r["value"]
-            for r in build_cfstats_metric(spark, root).collect()
+            for r in load_model_from_diag(spark, root).cfstats_metric.collect()
         }
         import math
 
@@ -273,30 +331,28 @@ class TestDiagRobustness:
         import os
         import shutil
 
-        from astra_perseverance_spark.sources.diag import build_gc_event
+        from astra_perseverance_spark.sources.diag import load_model_from_diag
 
-        root = self._copy_fixture(tmp_path)
-        n_before = build_gc_event(spark, root).count()
-        assert n_before > 0
+        intact = load_model_from_diag(spark, _copy_fixture(tmp_path, "intact"))
+        root = _copy_fixture(tmp_path)
         # replace the populated AdditionalLogs with an empty shell
         shutil.rmtree(os.path.join(root, "AdditionalLogs"))
         os.makedirs(os.path.join(root, "AdditionalLogs", "nodeh4",
                                  "var", "log", "cassandra"))
-        n_after = build_gc_event(spark, root).count()
-        assert n_after > 0, "node logs vanished with the empty tree"
+        # the side tree held 6 of 10-2-0-1's 12 GC events
+        # (test_additional_logs_tree); every node-log event must survive
+        n_after = load_model_from_diag(spark, root).gc_event.count()
+        assert n_after == intact.gc_event.count() - 6, \
+            "node logs vanished with the empty tree"
 
     def test_if_not_exists_ddl_parses_real_names(self, spark, tmp_path):
         """CREATE ... IF NOT EXISTS used to yield the literal token
         'IF' as the object/keyspace name for every statement kind
         except AGGREGATE."""
-        from astra_perseverance_spark.sources.diag import (
-            build_keyspace_rf,
-            build_schema_columns,
-            build_schema_objects,
-        )
+        from astra_perseverance_spark.sources.diag import load_model_from_diag
 
-        root = self._copy_fixture(tmp_path)
-        # _schema_lines reads the FIRST node's dump (min path) only
+        root = _copy_fixture(tmp_path)
+        # only the FIRST node's dump (min path) is parsed
         schema = f"{root}/nodes/10-2-0-1/driver/schema"
         with open(schema, "a") as fh:
             fh.write(
@@ -307,14 +363,14 @@ class TestDiagRobustness:
                 "    id int PRIMARY KEY,\n"
                 "    val text\n"
                 ");\n")
-        objs = build_schema_objects(spark, root)
-        names = {(r["ks"], r["name"]) for r in objs.collect()}
+        m = load_model_from_diag(spark, root)
+        names = {(r["ks"], r["name"]) for r in m.schema_object.collect()}
         assert ("lazyks", "lazytbl") in names, sorted(names)
         assert not any(ks == "IF" or n == "IF" for ks, n in names)
         rf = {(r["ks"], r["dc"]): r["rf"]
-              for r in build_keyspace_rf(spark, root).collect()}
+              for r in m.keyspace_rf.collect()}
         assert all(k[0] != "IF" for k in rf)
         assert any(k[0] == "lazyks" and v == 2 for k, v in rf.items())
         cols = {(r["ks"], r["tbl"], r["col"])
-                for r in build_schema_columns(spark, root).collect()}
+                for r in m.schema_column.collect()}
         assert ("lazyks", "lazytbl", "val") in cols

@@ -686,6 +686,15 @@ class TestDerivedAudits:
         assert any(v[0] is not None for v in got.values())
         assert any(v[0] is None for v in got.values())
 
+    def test_dedup_incremental_pairs_are_unique(self, q):
+        """split_assign_incremental counts anchors with ``count("*")``,
+        which is the distinct count only while dedup_incremental emits
+        each (doc_id, dup_of) pair once."""
+        pairs = [(r["doc_id"], r["dup_of"])
+                 for r in q("dedup_incremental").collect()]
+        assert pairs, "no incremental matches on the test corpus"
+        assert len(pairs) == len(set(pairs))
+
     def test_curation_funnel_counts_match_ledger(self, q):
         ledger = q("corpus_curate").collect()
         expect: dict[str, int] = {}

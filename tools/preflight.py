@@ -14,11 +14,9 @@ too late):
 
 1. docs/PLAN_AUDIT.md rows == live registry (the r4 staleness gate,
    tests/test_plan_shapes.py::test_plan_audit_doc_matches_registry).
-2. Rotation policy (tests/test_rotation.py — window leads with the
-   parity tier, every tail entry has a driver row within K rounds).
-3. Registry ↔ oracle key sync (every registered query has a DuckDB
+2. Registry ↔ oracle key sync (every registered query has a DuckDB
    twin or a declared NO_ORACLE exception).
-4. BENCH_DETAIL.json freshness: it must cover exactly the live
+3. BENCH_DETAIL.json freshness: it must cover exactly the live
    registry's queries and carry a ``run_context`` (the r9 lesson —
    the committed artifact was verbatim the previous round's file).
 
@@ -43,7 +41,6 @@ sys.path.insert(0, REPO)
 
 # The Spark-free pytest targets (no SparkSession fixture is touched).
 PYTEST_TARGETS = [
-    "tests/test_rotation.py",
     "tests/test_plan_shapes.py::test_plan_audit_doc_matches_registry",
     "tests/test_plan_shapes.py::"
     "test_fingerprint_normalizer_masks_per_session_tokens",
