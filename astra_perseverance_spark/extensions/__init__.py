@@ -10,8 +10,9 @@ needs:
 - ``text_stats`` — quality scoring, language ID, token counting,
   winnowing fingerprints.
 - ``multimodal`` — binary payload plumbing (typed metadata, Arrow
-  batch decode via ``mapInPandas``; the actual image/audio decode is a
-  clearly-marked stub — the libraries are not in this container).
+  batch feature extraction via ``mapInPandas``; video payloads are
+  synthesized AVI containers parsed back by a stdlib RIFF walk; no
+  pixel or sample decode).
 
 Every query is deterministic across engines (exact integer/dyadic
 arithmetic, see ``functions.texthash`` / ``functions.vectors``) so the

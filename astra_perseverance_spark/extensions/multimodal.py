@@ -1,7 +1,5 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-decoded/feature-extracted through Arrow-batched ``mapInPandas``.
-
-The Spark-side architecture is real and tested end to end:
+feature-extracted through Arrow-batched ``mapInPandas``.
 
 - payloads are a ``binary`` column (here synthesized from the document
   text — utf-8 bytes prefixed with a 4-byte magic — because no real
@@ -10,39 +8,26 @@ The Spark-side architecture is real and tested end to end:
   n_frames) next to the payload, never inside it, so partition
   pruning/column projection work on metadata without touching bytes;
 - feature extraction runs in ``mapInPandas`` over Arrow record
-  batches — the production shape for image decode: the Python worker
-  sees a ``pandas.DataFrame`` per batch, returns one conforming to an
-  explicit output schema.
+  batches: the Python worker sees a ``pandas.DataFrame`` per batch and
+  returns one conforming to an explicit output schema.
 
-Decode is TIERED, real wherever a dependency-free path exists:
-Pillow / PyAV when importable; otherwise a built-in PNG-subset
-decoder (RFC 2083, all five filters), a built-in BASELINE JPEG codec
-(``extensions.jpegcodec`` — full ITU T.81 sequential-Huffman decode:
-entropy, dequant, IDCT, chroma upsampling, YCbCr→RGB), stdlib WAV,
-and a stdlib AVI/RIFF container parse (``_avi_probe``).  Video
-payloads in the media table are REAL minimal AVI containers
-synthesized with column ops, so the registered queries parse an
-actual binary format — ``q_multimodal_frame_sample`` reads the avih
-total_frames field out of the payload bytes JVM-side — while the
-DuckDB twins recompute the embedded values arithmetically, keeping
-the whole round-trip under the driver's hash-match gate.  MJPEG
-streams (``##dc`` chunks holding JPEG) get per-frame codec-header
-stats (``_jpeg_dims`` → ``avi_frame_stats``) AND real pixel decode
-through the baseline codec; what remains ``NotImplementedError`` is
-only arithmetic-coded JPEG without Pillow and non-AVI containers
-without PyAV (progressive and 12-bit JPEG decode natively as of
-round 10).
+Video payloads are real minimal AVI containers synthesized with column
+ops, so both registered queries parse an actual binary format:
+``q_multimodal_features`` reads width/height/n_frames and the frame
+bytes through the stdlib RIFF parse ``_avi_probe``, and
+``q_multimodal_frame_sample`` reads the avih total_frames field out of
+the payload bytes JVM-side.  The DuckDB twins recompute the embedded
+values arithmetically, keeping the round-trip under the hash-match
+gate.  No pixel or sample decode is done: the features are container
+fields, byte lengths and content hashes.
 """
 
 from __future__ import annotations
 
 import hashlib
-import io
 import struct
-import zlib
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,175 +38,6 @@ FEATURE_SCHEMA = (
     "doc_id long, media_type string, width int, height int, n_frames int, "
     "byte_len long, content_h15 long"
 )
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-# PNG color type → channel count (3 = palette: one index channel).
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-# Adam7 interlace pass grid: (x0, y0, dx, dy) per pass.
-_ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
-
-
-def _png_unfilter(raw: bytes, h: int, stride: int, bpp: int,
-                  offset: int) -> tuple[np.ndarray, int]:
-    """Reverse the per-scanline filters over ``h`` lines of ``stride``
-    bytes starting at ``raw[offset]`` (filters operate on BYTES with a
-    ``bpp``-byte left neighbor, whatever the sample layout).  Returns
-    ((h, stride) uint8, offset past the consumed lines)."""
-    if len(raw) - offset < h * (stride + 1):
-        raise ValueError("PNG data length mismatch")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        base = offset + y * (stride + 1)
-        ftype = raw[base]
-        line = np.frombuffer(
-            raw, dtype=np.uint8, count=stride, offset=base + 1
-        ).astype(np.int32)
-        if ftype == 0:
-            cur = line
-        elif ftype == 2:  # up — vectorized
-            cur = (line + prev) & 0xFF
-        elif ftype in (1, 3, 4):  # sub/average/paeth need the left pixel
-            cur = line.copy()
-            pv = prev.astype(np.int32)
-            for i in range(stride):
-                a = cur[i - bpp] if i >= bpp else 0
-                b = pv[i]
-                if ftype == 1:
-                    cur[i] = (cur[i] + a) & 0xFF
-                elif ftype == 3:
-                    cur[i] = (cur[i] + (a + b) // 2) & 0xFF
-                else:
-                    c = pv[i - bpp] if i >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    cur[i] = (cur[i] + pred) & 0xFF
-        else:
-            raise ValueError(f"bad PNG filter type {ftype}")
-        out[y] = cur.astype(np.uint8)
-        prev = out[y]
-    return out, offset + h * (stride + 1)
-
-
-def _png_samples(lines: np.ndarray, w: int, ch: int,
-                 depth: int) -> np.ndarray:
-    """(h, stride) unfiltered bytes → (h, w, ch) samples (uint8, or
-    uint16 for depth 16; sub-byte depths unpack MSB-first)."""
-    h = lines.shape[0]
-    if depth == 8:
-        return lines[:, :w * ch].reshape(h, w, ch)
-    if depth == 16:
-        return np.frombuffer(lines.tobytes(), dtype=">u2").reshape(
-            h, -1)[:, :w * ch].reshape(h, w, ch).astype(np.uint16)
-    # depth 1/2/4 — single-channel (grey or palette indices)
-    bits = np.unpackbits(lines, axis=1)
-    vals = np.zeros((h, bits.shape[1] // depth), dtype=np.uint8)
-    for b in range(depth):
-        vals = (vals << 1) | bits[:, b::depth]
-    return vals[:, :w].reshape(h, w, 1)
-
-
-def _png_decode(data: bytes) -> np.ndarray:
-    """Pure-Python/numpy PNG decode (public spec, RFC 2083 / W3C
-    PNG): grey / RGB / grey+alpha / RGBA / palette color types, bit
-    depths 1/2/4/8/16, sequential AND Adam7-interlaced.
-
-    This is the dependency-free fallback when Pillow is absent — it
-    makes the decode path REAL and testable in a container with no
-    imaging library.  Production deployments install Pillow and never
-    reach it.  Returns (h, w, channels) uint8 — or uint16 for 16-bit
-    depth; palette images resolve through PLTE (+ tRNS alpha when
-    present) to RGB/RGBA.  A tRNS color-key on non-palette images is
-    ignored (Pillow territory)."""
-    if data[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, idat, meta, plte, trns = 8, b"", None, None, None
-    while pos + 8 <= len(data):
-        (length,), ctype = struct.unpack(">I", data[pos:pos + 4]), data[pos + 4:pos + 8]
-        chunk = data[pos + 8:pos + 8 + length]
-        pos += 12 + length
-        if ctype == b"IHDR":
-            if len(chunk) < 13:
-                raise ValueError("PNG IHDR chunk truncated")
-            meta = struct.unpack(">IIBBBBB", chunk[:13])
-        elif ctype == b"PLTE":
-            plte = np.frombuffer(chunk, dtype=np.uint8).reshape(-1, 3)
-        elif ctype == b"tRNS":
-            trns = np.frombuffer(chunk, dtype=np.uint8)
-        elif ctype == b"IDAT":
-            idat += chunk
-        elif ctype == b"IEND":
-            break
-    if meta is None:
-        raise ValueError("PNG missing IHDR")
-    w, h, depth, color, _comp, _filt, interlace = meta
-    ok = (color in _PNG_CHANNELS and depth in (1, 2, 4, 8, 16)
-          and interlace in (0, 1)
-          and not (depth < 8 and color not in (0, 3))
-          and not (depth == 16 and color == 3))
-    if not ok:
-        raise NotImplementedError(
-            f"PNG subset decoder: unsupported combination "
-            f"(depth={depth}, color={color}, interlace={interlace}); "
-            f"install Pillow for full coverage")
-    if color == 3 and plte is None:
-        raise ValueError("palette PNG missing PLTE")
-    ch = _PNG_CHANNELS[color]
-    raw = zlib.decompress(idat)
-    bpp = max(1, ch * depth // 8)
-    dtype = np.uint16 if depth == 16 else np.uint8
-    samples = np.zeros((h, w, ch), dtype=dtype)
-    offset = 0
-    for x0, y0, dx, dy in (_ADAM7 if interlace else [(0, 0, 1, 1)]):
-        pw = (w - x0 + dx - 1) // dx
-        ph = (h - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
-        stride = (pw * ch * depth + 7) // 8
-        lines, offset = _png_unfilter(raw, ph, stride, bpp, offset)
-        samples[y0::dy, x0::dx] = _png_samples(lines, pw, ch, depth)
-    if offset != len(raw):
-        raise ValueError("PNG data length mismatch")
-    if color == 3:
-        idx = samples[:, :, 0]
-        if int(idx.max()) >= len(plte):
-            raise ValueError("PNG palette index out of range")
-        rgb = plte[idx]
-        if trns is None:
-            return rgb
-        alpha = np.full(len(plte), 255, dtype=np.uint8)
-        alpha[: len(trns)] = trns
-        return np.concatenate([rgb, alpha[idx][..., None]], axis=-1)
-    if depth < 8:  # grey 1/2/4 → 8-bit range
-        samples = (samples * (255 // ((1 << depth) - 1))).astype(np.uint8)
-    return samples
-
-
-def _wav_decode(data: bytes) -> np.ndarray:
-    """PCM WAV decode via the stdlib ``wave`` module — returns an
-    (n_frames, n_channels) sample array: uint8 (8-bit), int16
-    (16-bit), or int32 (24-bit — sign-extended little-endian triples
-    assembled into the high 3 bytes of an int32 then shifted, the
-    standard WAV int24 layout — and 32-bit PCM).  Non-PCM encodings
-    (float, ADPCM, ...) are the ``wave`` module's declared residue."""
-    import wave
-
-    with wave.open(io.BytesIO(data), "rb") as f:
-        n, chans, width = f.getnframes(), f.getnchannels(), f.getsampwidth()
-        frames = f.readframes(n)
-    if width == 3:
-        b = np.frombuffer(frames, dtype=np.uint8).reshape(-1, 3)
-        out = np.zeros(len(b), dtype=np.int32)
-        out |= b[:, 0].astype(np.int32) << 8
-        out |= b[:, 1].astype(np.int32) << 16
-        out |= b[:, 2].astype(np.int32) << 24
-        return (out >> 8).reshape(-1, chans)  # arithmetic: sign extends
-    dtype = {1: np.uint8, 2: np.dtype("<i2"), 4: np.dtype("<i4")}.get(width)
-    if dtype is None:
-        raise NotImplementedError(f"WAV sample width {width} unsupported")
-    return np.frombuffer(frames, dtype=dtype).reshape(-1, chans)
 
 
 def _avi_probe(data: bytes) -> tuple[int, int, int, list[bytes]]:
@@ -247,8 +63,8 @@ def _avi_probe(data: bytes) -> tuple[int, int, int, list[bytes]]:
                 walk(pos + 12, pos + 8 + length)  # skip the form tag
             elif cid == b"avih":
                 if len(body) < 56:
-                    # ValueError, not struct.error: malformed-payload
-                    # convention (the jpegcodec ADVICE precedent)
+                    # ValueError, not struct.error: a malformed payload
+                    # raises the same error type as a non-AVI one
                     raise ValueError("AVI avih header truncated")
                 f = struct.unpack("<14I", body[:56])
                 n_frames, width, height = f[4], f[8], f[9]
@@ -260,141 +76,6 @@ def _avi_probe(data: bytes) -> tuple[int, int, int, list[bytes]]:
     if n_frames < 0:
         raise ValueError("AVI missing avih header")
     return width, height, n_frames, frames
-
-
-_JPEG_SOI = b"\xff\xd8"
-# SOF0–SOF15 minus DHT (C4), JPG (C8), DAC (CC) — ITU T.81 table B.1
-_JPEG_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
-
-
-def _jpeg_dims(data: bytes) -> tuple[int, int]:
-    """(height, width) from a JPEG's SOF frame header — a pure-stdlib
-    marker-segment walk of the public ITU T.81 / JFIF format.  Reads
-    the real codec bitstream header (not container metadata), which
-    is exactly what an MJPEG frame sampler needs without a full
-    entropy decoder."""
-    if data[:2] != _JPEG_SOI:
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    n = len(data)
-    while pos + 2 <= n:
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        # ITU T.81 B.1.1.2: a marker may be preceded by any number of
-        # 0xFF fill bytes — the marker code is the first non-FF byte.
-        while pos + 1 < n and data[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 2 > n:
-            break
-        marker = data[pos + 1]
-        if marker == 0x01 or 0xD0 <= marker <= 0xD8:  # standalone
-            pos += 2
-            continue
-        if pos + 4 > n:
-            break
-        (seglen,) = struct.unpack(">H", data[pos + 2:pos + 4])
-        if marker in _JPEG_SOF_MARKERS:
-            if pos + 9 > n:
-                raise ValueError("truncated JPEG SOF segment")
-            h, w = struct.unpack(">HH", data[pos + 5:pos + 9])
-            return h, w
-        if marker == 0xDA:  # SOS: entropy data — SOF must have come first
-            break
-        pos += 2 + seglen
-    raise ValueError("JPEG missing SOF header")
-
-
-def avi_frame_stats(payload: bytes) -> list[tuple[int, int, int, int]]:
-    """Per-frame (frame_no, height, width, byte_len) for an AVI
-    payload.  MJPEG streams (``##dc`` chunks carrying JPEG) get their
-    dims from each frame's OWN SOF header via ``_jpeg_dims`` — a real
-    per-frame codec-header decode; uncompressed DIB streams report
-    the container's avih dims (the chunk bytes are the pixels)."""
-    width, height, _n, frames = _avi_probe(payload)
-    out = []
-    for i, fr in enumerate(frames):
-        if fr[:2] == _JPEG_SOI:
-            h, w = _jpeg_dims(fr)
-        else:
-            h, w = height, width
-        out.append((i, h, w, len(fr)))
-    return out
-
-
-def decode_media(payload: bytes, media_type: str) -> np.ndarray:
-    """Decode an image/audio/video payload into pixel/sample arrays.
-
-    Tiered: Pillow when importable (any image format); otherwise the
-    built-in PNG subset decoder (``_png_decode``), the built-in
-    baseline JPEG decoder (``extensions.jpegcodec``, pure
-    numpy/stdlib per the public ITU T.81 spec) and stdlib WAV decode,
-    which keep the decode branch real — and tested, see
-    ``tests/test_multimodal.py`` / ``tests/test_jpegcodec.py`` — in
-    dependency-free containers.  Video: PyAV when importable (any
-    codec); otherwise the stdlib AVI container parse (``_avi_probe``)
-    decodes MJPEG streams frame-by-frame through the same baseline
-    JPEG codec, and returns raw frame-chunk bytes for uncompressed
-    DIB streams (literal pixel data).
-
-    The library tiers fall back on FAILURE, not just absence: an
-    installed Pillow cannot decode 12-bit JPEG (libjpeg is 8-bit) and
-    an installed PyAV rejects the engine's own minimal synthesized
-    AVIs — payloads the built-in codecs handle — so a library error
-    falls through to the builtins rather than regressing the
-    dependency-free surface.  The remaining ``NotImplementedError``
-    surface: non-AVI video without PyAV, and arithmetic-coded JPEG
-    frames without Pillow (progressive and 12-bit decode natively)."""
-    if media_type == "image":
-        try:
-            from PIL import Image  # optional dependency
-            return np.asarray(Image.open(io.BytesIO(payload)))
-        except Exception:  # noqa: BLE001 — absent OR failed: builtins next
-            if payload[:8] == _PNG_SIG:
-                return _png_decode(payload)
-            if payload[:2] == _JPEG_SOI:
-                return _jpeg_pixels(payload)
-            raise NotImplementedError(
-                "non-PNG/JPEG image decode requires Pillow") from None
-    if media_type == "audio":
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            return _wav_decode(payload)
-        raise NotImplementedError("non-WAV audio decode requires soundfile")
-    try:
-        import av  # optional dependency
-
-        with av.open(io.BytesIO(payload)) as container:
-            return np.stack([
-                frame.to_ndarray(format="rgb24")
-                for frame in container.decode(video=0)
-            ])
-    except Exception:  # noqa: BLE001 — absent OR failed: builtins next
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            *_dims, frames = _avi_probe(payload)
-            if frames and frames[0][:2] == _JPEG_SOI:
-                # MJPEG: per-frame pixel decode through the shared
-                # Pillow-else-builtin JPEG tier
-                return np.stack([_jpeg_pixels(fr) for fr in frames])
-            return np.frombuffer(b"".join(frames), dtype=np.uint8)
-        raise NotImplementedError(
-            "non-AVI video decode requires PyAV/ffmpeg") from None
-
-
-def _jpeg_pixels(payload: bytes) -> np.ndarray:
-    """The ONE Pillow-else-builtin JPEG pixel tier, shared by the
-    image branch and the per-frame MJPEG branch: Pillow when it is
-    both importable AND succeeds (any JPEG flavor), else the built-in
-    codec (``extensions.jpegcodec``, pure numpy/stdlib per ITU T.81
-    incl. progressive and 12-bit; arithmetic frames raise
-    NotImplementedError there)."""
-    try:
-        from PIL import Image  # optional dependency
-        return np.asarray(Image.open(io.BytesIO(payload)))
-    except Exception:  # noqa: BLE001 — absent OR failed: builtin next
-        from astra_perseverance_spark.extensions.jpegcodec import (
-            decode_baseline_jpeg,
-        )
-
-        return decode_baseline_jpeg(payload)
 
 
 def _le32_hex(c: F.Column) -> F.Column:

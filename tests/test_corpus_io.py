@@ -13,11 +13,14 @@ value is in the adversarial text, not the volume.
 
 from __future__ import annotations
 
+import math
 import shutil
 import tempfile
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+
+from tests.conftest import SF_SMALL
 
 # Surrogates are excluded by hypothesis' default text alphabet; keep
 # control characters (newline, tab, NUL) — a crawl dump carries them.
@@ -377,3 +380,122 @@ def test_streamed_corpus_seal_compact_preserves_query_results(
                  QUERY_REGISTRY[n](spark, corpus).collect()}
              for n in names}
     assert after == before
+
+
+# Partition width.  Parquet frames derive theirs from the row count
+# (``corpus.cluster_width``), the ingest writers from the source's listed
+# bytes (``corpus_jsonl.ingest_width``): floored at small inputs, linear
+# in the input at large ones, and overridable from the environment.
+
+
+def test_cluster_width_formula(spark):
+    from astra_perseverance_spark.extensions.corpus import cluster_width
+
+    par = spark.sparkContext.defaultParallelism
+    # tiny corpus: floored by min_rows, never below 1
+    assert cluster_width(spark, 1, 1_000, 50_000) == 1
+    assert cluster_width(spark, 999, 1_000, 50_000) == 1
+    assert cluster_width(spark, 2_000, 1_000, 50_000) == min(par, 2)
+    # mid corpus: all cores, tasks between min and target
+    assert cluster_width(spark, par * 50_000, 1_000, 50_000) == par * 1
+    # huge corpus: width grows linearly (n / target), independent of
+    # the core count — the production end of the scale
+    n = 1_000_000_000
+    assert cluster_width(spark, n, 1_000, 50_000) == math.ceil(n / 50_000)
+    # degenerate knobs are clamped, not fatal
+    assert cluster_width(spark, 10, 0, 0) == 10
+
+
+def test_cluster_width_env_overrides(spark, monkeypatch):
+    from astra_perseverance_spark.extensions import corpus
+
+    monkeypatch.setenv(corpus.DOCS_MIN_ROWS_ENV, "1")
+    par = spark.sparkContext.defaultParallelism
+    # min_rows=1 reproduces the pre-r15 defaultParallelism width for
+    # any corpus of at least `par` docs (the A/B isolation knob)
+    assert corpus._docs_width(spark, SF_SMALL) == min(
+        par, corpus.n_docs(spark, SF_SMALL))
+    monkeypatch.delenv(corpus.DOCS_MIN_ROWS_ENV)
+    expected = corpus.cluster_width(
+        spark, corpus.n_docs(spark, SF_SMALL),
+        corpus.DOCS_MIN_ROWS, corpus.DOCS_TARGET_ROWS)
+    assert corpus._docs_width(spark, SF_SMALL) == expected
+
+
+def test_source_bytes_listing(spark, tmp_path):
+    from astra_perseverance_spark.sources.corpus_jsonl import source_bytes
+
+    d = tmp_path / "dump"
+    d.mkdir()
+    (d / "a.jsonl").write_bytes(b"x" * 1000)
+    (d / "b.jsonl").write_bytes(b"y" * 2345)
+    sub = d / "sub"
+    sub.mkdir()
+    (sub / "c.jsonl").write_bytes(b"z" * 55)
+    # single file
+    assert source_bytes(spark, str(d / "a.jsonl")) == 1000
+    # directory: recursive total
+    assert source_bytes(spark, str(d)) == 1000 + 2345 + 55
+    # glob: only matching files
+    assert source_bytes(spark, str(d / "*.jsonl")) == 1000 + 2345
+
+
+def test_ingest_width_arms(spark, tmp_path, monkeypatch):
+    from astra_perseverance_spark.sources import corpus_jsonl as cj
+
+    par = spark.sparkContext.defaultParallelism
+    f = tmp_path / "tiny.jsonl"
+    f.write_bytes(b"{}\n" * 100)
+
+    monkeypatch.delenv(cj.INGEST_MIN_BYTES_ENV, raising=False)
+    monkeypatch.delenv(cj.INGEST_TARGET_BYTES_ENV, raising=False)
+    # tiny source: floor arm — one task
+    assert cj.ingest_width(spark, str(f)) == 1
+    # env floor of 1 byte: min(cores, n_bytes) — the pre-r16
+    # defaultParallelism behavior is reproducible for deploys
+    monkeypatch.setenv(cj.INGEST_MIN_BYTES_ENV, "1")
+    assert cj.ingest_width(spark, str(f)) == min(par, f.stat().st_size)
+    monkeypatch.delenv(cj.INGEST_MIN_BYTES_ENV)
+    # linear arm: width = ceil(bytes / target), independent of cores
+    monkeypatch.setenv(cj.INGEST_TARGET_BYTES_ENV, "50")
+    n = f.stat().st_size
+    assert cj.ingest_width(spark, str(f)) == math.ceil(n / 50)
+
+
+def test_ingest_writers_use_derived_width(spark, tmp_path, monkeypatch):
+    """The three converted outputs carry exactly ``ingest_width``
+    parquet part-files (upper-bounds the write parallelism the old
+    constant hard-coded)."""
+    import glob as _glob
+    import json
+
+    from astra_perseverance_spark.sources import corpus_jsonl as cj
+    from astra_perseverance_spark.sources.events_jsonl import (
+        ingest_events_jsonl,
+    )
+
+    monkeypatch.delenv(cj.INGEST_MIN_BYTES_ENV, raising=False)
+    monkeypatch.delenv(cj.INGEST_TARGET_BYTES_ENV, raising=False)
+
+    docs = tmp_path / "docs.jsonl"
+    docs.write_text("\n".join(
+        json.dumps({"doc_id": i, "text": f"doc {i} text",
+                    "lang": "en", "source": "t"}) for i in range(20)))
+    out = tmp_path / "corpus"
+    cj.ingest_jsonl_corpus(spark, str(docs), str(out))
+    parts = _glob.glob(str(out / "documents.parquet" / "part-*"))
+    assert len(parts) == cj.ingest_width(spark, str(docs)) == 1
+
+    ev = tmp_path / "events.jsonl"
+    ev.write_text("\n".join(
+        json.dumps({"event_id": i, "ts": "2031-03-01T00:00:%02d" % (i % 60),
+                    "user_id": i % 3, "event_type": "click",
+                    "value": 1.0, "props": None}) for i in range(30)))
+    out2 = tmp_path / "evdir"
+    ingest_events_jsonl(spark, str(ev), str(out2))
+    parts2 = _glob.glob(str(out2 / "events.parquet" / "part-*"))
+    assert len(parts2) == cj.ingest_width(spark, str(ev)) == 1
+
+    # round-trip sanity: the converted corpus serves reads unchanged
+    got = spark.read.parquet(str(out / "documents.parquet"))
+    assert got.count() == 20

@@ -301,11 +301,19 @@ class TestDiagRobustness:
     fixture and parsed by a fresh load, so no frame cached from
     another tree can answer."""
 
-    def test_nan_latency_does_not_poison_sums(self, spark, tmp_path):
+    def test_nan_latency_does_not_poison_sums(self, spark, tmp_path, model):
         """nodetool prints 'Local read latency: NaN ms' for idle
         tables; try_cast gives double NaN (not null), and one NaN row
         used to turn the per-table SUM into NaN — every threshold
-        comparison downstream silently false."""
+        comparison downstream silently false.
+
+        The same copy carries a node dir that only a gossip endpoint
+        resolves, to an IP that status does not list: that IP is added
+        to missing_node, and every other table equals the intact
+        fixture's."""
+        import dataclasses
+        import shutil
+
         from astra_perseverance_spark.sources.diag import load_model_from_diag
 
         root = _copy_fixture(tmp_path)
@@ -313,14 +321,27 @@ class TestDiagRobustness:
         with open(cf, "a") as fh:
             fh.write("\nKeyspace : shop\n\t\tTable: orders\n"
                      "\t\tLocal read latency: NaN ms\n")
+        ghost = f"{root}/nodes/ghosth5"
+        shutil.copytree(f"{root}/nodes/nodeh4", ghost)
+        with open(f"{ghost}/nodetool/gossipinfo", "a") as fh:
+            fh.write("ghosth5/10.3.0.7\n  DC:8:dc3\n")
+        m = load_model_from_diag(spark, root)
         vals = {
             (r["ks"], r["tbl"], r["metric"]): r["value"]
-            for r in load_model_from_diag(spark, root).cfstats_metric.collect()
+            for r in m.cfstats_metric.collect()
         }
         import math
 
         assert vals, "fixture parsed to nothing"
         assert not any(math.isnan(v) for v in vals.values()), vals
+
+        assert {r["ip"] for r in m.missing_node.collect()} == {
+            "10.9.9.9", "10.3.0.7"}
+        for f in dataclasses.fields(m):
+            if f.name != "missing_node":
+                got, want = (sorted(map(repr, getattr(x, f.name).collect()))
+                             for x in (m, model))
+                assert got == want, f.name
 
     def test_empty_additional_logs_tree_keeps_node_logs(self, spark,
                                                         tmp_path):

@@ -33,6 +33,63 @@ def _query_names():
     return sorted(QUERY_REGISTRY)
 
 
+# The registry's plan memo: a per-(session, corpus, mode) cache that
+# ``release_memos`` fully drops, that cfg-parameterized calls bypass,
+# and that keeps each builder's module visible to the tooling.  They run
+# before the parity sweep below, so the memos it builds stay warm for the
+# test files after this one.
+
+
+def test_registry_plan_memo_contract(spark):
+    from astra_perseverance_spark.conformed.model import release_memos
+    from astra_perseverance_spark.queries import QUERY_REGISTRY
+
+    fn = QUERY_REGISTRY["token_count"]
+    release_memos(spark)
+    a = fn(spark, SF_SMALL)
+    b = fn(spark, SF_SMALL)
+    # memo hit: the SAME constructed DataFrame object, not a rebuild
+    assert a is b
+    # release_memos drops plan memos with the frame memos — the bench
+    # isolation protocol (warm run rebuilds, timed runs reuse)
+    release_memos(spark)
+    c = fn(spark, SF_SMALL)
+    assert c is not a
+    # results identical either way (memo returns the same plan the
+    # builder constructs)
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, c.collect()))
+    release_memos(spark)
+
+
+def test_registry_cfg_calls_bypass_memo(spark):
+    """The report/export sinks call a handful of parity queries with a
+    third cfg argument; those calls must reach the raw builder (never
+    the default-cfg memo slot) and still work through the wrapper."""
+    from astra_perseverance_spark.conformed.model import release_memos
+    from astra_perseverance_spark.config import EngineConfig
+    from astra_perseverance_spark.queries import QUERY_REGISTRY
+
+    fn = QUERY_REGISTRY["workload_summary"]
+    release_memos(spark)
+    default = fn(spark, SF_SMALL)
+    with_cfg = fn(spark, SF_SMALL, EngineConfig())
+    assert with_cfg is not default  # bypassed the memo slot
+    assert fn(spark, SF_SMALL) is default  # memo undisturbed
+    assert sorted(default.columns) == sorted(with_cfg.columns)
+    release_memos(spark)
+
+
+def test_registry_wrapper_preserves_builder_identity():
+    """Coverage/export tooling classifies queries by the builder's
+    module (``fn.__module__``); the memo wrapper must not mask it."""
+    from astra_perseverance_spark.queries import QUERY_REGISTRY
+
+    assert QUERY_REGISTRY["token_count"].__module__.endswith(
+        "extensions.text_stats")
+    assert QUERY_REGISTRY["workload_reads"].__module__.endswith(
+        "queries.workload")
+
+
 @pytest.mark.parametrize("name", _query_names())
 def test_query_matches_oracle(spark, oracle_con, name):
     from astra_perseverance_spark.oracle import ORACLE_SQL

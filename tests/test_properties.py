@@ -195,25 +195,6 @@ class TestIntegerDivision:
 
 
 class TestMultimodal:
-    def test_video_decode_stub_raises(self):
-        """PNG/WAV decode is real and AVI parses codec-free
-        (tests/test_multimodal.py); a NON-AVI video payload without
-        PyAV must fail loudly with NotImplementedError, not fake an
-        answer.  With PyAV importable the real decoder owns the path
-        (and raises its own codec error on garbage), so the stub
-        assertion only applies when PyAV is absent."""
-        from astra_perseverance_spark.extensions.multimodal import decode_media
-
-        try:
-            import av  # noqa: F401
-            has_av = True
-        except ImportError:
-            has_av = False
-        if has_av:
-            pytest.skip("PyAV installed: real decoder owns video path")
-        with pytest.raises(NotImplementedError):
-            decode_media(b"APSE1234", "video")
-
     def test_feature_batch_shape(self, q, spark):
         feats = q("multimodal_features").collect()
         docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").count()

@@ -325,3 +325,70 @@ def test_events_reingest_idempotent_with_bucketed_env(
     n = spark.table(table).count()
     raw = spark.read.parquet(f"{SF_SMALL}/events.parquet").count()
     assert n == raw > 0
+
+
+# Raw vs bucketed events: ``_events_by_user`` repartitions by user only
+# in raw mode, and ``_serving_bucketed_events`` is the one predicate that
+# picks the mode.
+
+
+def test_events_by_user_width_contract(spark, monkeypatch):
+    """C4 (r15): the whole-user window consumers read events through
+    ``_events_by_user`` — a row-derived-width repartition in raw mode,
+    a passthrough in bucketed mode (the warehouse zero-Exchange plans
+    must stay exchange-free)."""
+    from astra_perseverance_spark.extensions import corpus, timeseries
+    from astra_perseverance_spark.extensions.timeseries import (
+        _events_by_user,
+        n_events,
+    )
+
+    # raw mode: the plan carries a user_id hash repartition at the
+    # cluster_width the events row count derives
+    monkeypatch.delenv(corpus.BUCKETED_DB_ENV, raising=False)
+    n = n_events(spark, SF_SMALL)
+    expect = corpus.cluster_width(
+        spark, n, timeseries.EVENTS_MIN_ROWS, timeseries.EVENTS_TARGET_ROWS)
+    df = _events_by_user(spark, SF_SMALL)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "RepartitionByExpression [user_id" in plan
+
+    def _repart_width(frame) -> int:
+        # anchored extract of the RepartitionByExpression width — a
+        # substring check like ", 8" would false-pass on ", 80"
+        # (ADVICE r15)
+        import re
+
+        line = frame._jdf.queryExecution().analyzed().toString(
+        ).splitlines()[0]
+        m = re.search(r", (\d+)$", line.rstrip())
+        assert m, f"no trailing width in: {line!r}"
+        return int(m.group(1))
+
+    assert _repart_width(df) == expect
+    # env override reproduces the pre-r15 defaultParallelism behavior
+    monkeypatch.setenv(timeseries.EVENTS_MIN_ROWS_ENV, "1")
+    par = spark.sparkContext.defaultParallelism
+    assert _repart_width(_events_by_user(spark, SF_SMALL)) == min(par, n)
+    monkeypatch.delenv(timeseries.EVENTS_MIN_ROWS_ENV)
+    # the three switched consumers still agree with plain _sessionize
+    # over the plain frame (results are partitioning-independent)
+    from astra_perseverance_spark.extensions.timeseries import (
+        _events_ns,
+        _sessionize,
+    )
+    a = sorted(map(tuple, _sessionize(
+        _events_ns(spark, SF_SMALL)).collect()))
+    b = sorted(map(tuple, timeseries.q_events_sessionize(
+        spark, SF_SMALL).collect()))
+    assert a == b
+
+
+def test_serving_bucketed_events_predicate(spark, monkeypatch):
+    from astra_perseverance_spark.extensions import corpus, timeseries
+
+    monkeypatch.delenv(corpus.BUCKETED_DB_ENV, raising=False)
+    assert timeseries._serving_bucketed_events(spark) is False
+    # db set but no events table -> still False (corpus-only warehouse)
+    monkeypatch.setenv(corpus.BUCKETED_DB_ENV, "no_such_db_r16")
+    assert timeseries._serving_bucketed_events(spark) is False

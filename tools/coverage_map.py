@@ -55,6 +55,7 @@ def main() -> int:
     ]
     fam_of = dict(FAMILIES)
     for name, fn in QUERY_REGISTRY.items():
+        fn = inspect.unwrap(fn)  # the builder, not the registry's memo wrapper
         src = inspect.getsourcefile(fn)
         rel = os.path.relpath(src, REPO)
         line = inspect.getsourcelines(fn)[1]
