@@ -112,59 +112,72 @@ class ConformedModel:
 # the life of a session and never reused after spark.stop(), unlike
 # id(spark) (a new session can land on the same CPython id).
 _MODEL_CACHE: Dict[Tuple[str, str], ConformedModel] = {}
-_NODE_COUNT_CACHE: Dict[Tuple[str, str], int] = {}
 
 
 def _session_key(spark: SparkSession, sf_dir: str) -> Tuple[str, str]:
     return (spark.sparkContext.applicationId, sf_dir)
 
 
-# memo for small *aggregated* frames shared across queries (per-table
-# workload aggs, totals, warnings, GC histograms).  Everything cached
-# here is dims-or-smaller grain — safe to pin at any fact scale — and
-# one query's materialization pays for every later consumer's subtree.
-_FRAME_MEMO: Dict[tuple, DataFrame] = {}
+# The session memo: every frame and driver scalar shared across queries
+# (per-table workload aggs, totals, warnings, the GC histogram, corpus
+# and event counts, per-dimension stats), under one key and dropped by
+# one ``release_memos``.  Frames cached here are dims-or-smaller grain
+# — safe to pin at any fact scale — and one query's materialization
+# pays for every later consumer's subtree.
+_FRAME_MEMO: Dict[tuple, object] = {}
 
 
-def memo_frame(spark: SparkSession, sf_dir: str, tag: tuple, build) -> DataFrame:
-    """Session-scoped memo: ``build()`` once, ``.cache()``, reuse.
+def memo_value(spark: SparkSession, sf_dir: str, tag: tuple, build):
+    """Session-scoped memo: ``build()`` once, reuse the result as is.
+    Driver scalars (row counts, per-dimension stats) go here; frames go
+    through ``memo_frame``, which also caches them.
 
-    The bucketed-warehouse and index-store modes are part of the key:
-    toggling ``SPARK_GRAFT_BUCKETED_DB`` / ``SPARK_GRAFT_INDEX_DB``
-    mid-session must never serve a frame memoized from the other mode
-    (a parquet-derived artifact silently standing in for the persisted
-    table, or vice versa)."""
+    The key is (session, ``sf_dir``, warehouse mode, index mode,
+    ``tag``).  Toggling ``SPARK_GRAFT_BUCKETED_DB`` /
+    ``SPARK_GRAFT_INDEX_DB`` mid-session must never serve an entry
+    built in the other mode (a parquet-derived artifact silently
+    standing in for the persisted table, or vice versa)."""
     import os as _os
 
     key = (_session_key(spark, sf_dir),
            _os.environ.get("SPARK_GRAFT_BUCKETED_DB") or None,
            _os.environ.get("SPARK_GRAFT_INDEX_DB") or None, tag)
     if key not in _FRAME_MEMO:
-        _tune_session(spark)  # extension queries enter here, not load_model
-        _FRAME_MEMO[key] = build().cache()
+        _FRAME_MEMO[key] = build()
     return _FRAME_MEMO[key]
 
 
-def release_memos(spark: SparkSession) -> int:
-    """Unpersist and forget every ``memo_frame``/``memo_plan`` entry for
-    this session (the conformed model cache is NOT touched).
+def memo_frame(spark: SparkSession, sf_dir: str, tag: tuple, build) -> DataFrame:
+    """``memo_value`` for a frame: ``build()`` once, ``.cache()``, reuse."""
 
-    Benchmark isolation hook: the memo pool deliberately shares cached
-    subtrees across queries, which is right for a report run but makes
-    per-query timings non-attributable — query B's number includes
-    memory pressure from query A's pinned frames.  ``bench.py`` calls
-    this between queries so each measurement sees only the model cache
-    plus the frames the query itself (re)builds.  Returns the number of
-    entries dropped."""
+    def cached() -> DataFrame:
+        _tune_session(spark)  # extension queries enter here, not load_model
+        return build().cache()
+
+    return memo_value(spark, sf_dir, tag, cached)
+
+
+def release_memos(spark: SparkSession) -> int:
+    """Unpersist and forget every session-memo entry for this session
+    (the conformed model cache is NOT touched).
+
+    The memo pool deliberately shares cached subtrees across queries,
+    which is right for a report run but makes per-query timings
+    non-attributable — query B's number includes memory pressure from
+    query A's pinned frames — and makes a later build in the same
+    session skip work it would do cold.  ``bench.py`` and the tools
+    and tests that time or re-check single queries call this between
+    them.  Returns the number of entries dropped."""
     app_id = spark.sparkContext.applicationId
     dropped = 0
     for key in [k for k in _FRAME_MEMO if k[0][0] == app_id]:
-        df = _FRAME_MEMO.pop(key)
-        try:
-            if df.is_cached:
-                df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — context already stopped
-            pass
+        val = _FRAME_MEMO.pop(key)
+        if isinstance(val, DataFrame):
+            try:
+                if val.is_cached:
+                    val.unpersist(blocking=False)
+            except Exception:  # noqa: BLE001 — context already stopped
+                pass
         dropped += 1
     # The BPE learn state lives outside the memo pool (checkpointed
     # RDD-backed frames, not cached plans) but is the same kind of
@@ -185,37 +198,11 @@ def release_memos(spark: SparkSession) -> int:
     return dropped
 
 
-def memo_plan(spark: SparkSession, sf_dir: str, tag: tuple, build) -> DataFrame:
-    """Like ``memo_frame`` but WITHOUT ``.cache()`` — reuses only the
-    constructed DataFrame (logical plan).  For wide assembly queries
-    (the Q20 document builds hundreds of column expressions through
-    py4j — ~1 s of pure driver time), re-running the builder costs
-    more than executing the plan; memoizing the plan object is free
-    and changes nothing about execution.
-
-    The warehouse/index mode toggles are part of the key for the same
-    reason as in ``memo_frame``: a query plan built in raw-parquet
-    mode must never be served to a bucketed-warehouse session (the
-    bench's bucketed section flips the env mid-session and re-invokes
-    the same query fns)."""
-    import os as _os
-
-    key = (_session_key(spark, sf_dir),
-           _os.environ.get("SPARK_GRAFT_BUCKETED_DB") or None,
-           _os.environ.get("SPARK_GRAFT_INDEX_DB") or None,
-           ("plan",) + tag)
-    if key not in _FRAME_MEMO:
-        _FRAME_MEMO[key] = build()
-    return _FRAME_MEMO[key]
-
-
 def _n_nodes(spark: SparkSession, sf_dir: str) -> int:
     """Node count (supplier rows) — a driver-side scalar folded into the
     plans.  Memoized so builders don't re-run the count job per query."""
-    key = _session_key(spark, sf_dir)
-    if key not in _NODE_COUNT_CACHE:
-        _NODE_COUNT_CACHE[key] = _read(spark, sf_dir, "supplier").count()
-    return _NODE_COUNT_CACHE[key]
+    return memo_value(spark, sf_dir, ("n_nodes",),
+                      lambda: _read(spark, sf_dir, "supplier").count())
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

@@ -21,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from astra_perseverance_spark.conformed.model import memo_frame
+from astra_perseverance_spark.conformed.model import memo_frame, memo_value
 from astra_perseverance_spark.functions.vectors import (
     hyperplane_bucket,
     norm2_q,
@@ -197,32 +197,21 @@ def clustered_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> row counts: driver-side scalars
-# (parquet-metadata counts) that size the corpus-scaled key spaces
-# (LSH plane count, SimHash block width); memoized so consumers don't
-# re-run the count job.
-_VEC_COUNT: dict[tuple, int] = {}
-_DOC_COUNT: dict[tuple, int] = {}
-
-
+# Row counts: driver-side scalars (parquet-metadata counts) that size
+# the corpus-scaled key spaces (LSH plane count, SimHash block width);
+# memoized so consumers don't re-run the count job.
 def n_vectors(spark: SparkSession, sf_dir: str) -> int:
     db = bucketed_db()
-    key = (spark.sparkContext.applicationId, sf_dir, db)
-    if key not in _VEC_COUNT:
-        src = (spark.table(f"{db}.embeddings") if db else
-               spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-        _VEC_COUNT[key] = src.count()
-    return _VEC_COUNT[key]
+    return memo_value(spark, sf_dir, ("n_vectors",), lambda: (
+        spark.table(f"{db}.embeddings") if db else
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet")).count())
 
 
 def n_docs(spark: SparkSession, sf_dir: str) -> int:
     db = bucketed_db()
-    key = (spark.sparkContext.applicationId, sf_dir, db)
-    if key not in _DOC_COUNT:
-        src = (spark.table(f"{db}.documents") if db else
-               spark.read.parquet(f"{sf_dir}/documents.parquet"))
-        _DOC_COUNT[key] = src.count()
-    return _DOC_COUNT[key]
+    return memo_value(spark, sf_dir, ("n_docs",), lambda: (
+        spark.table(f"{db}.documents") if db else
+        spark.read.parquet(f"{sf_dir}/documents.parquet")).count())
 
 
 def vectors_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,11 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from astra_perseverance_spark.conformed.model import memo_frame
-from astra_perseverance_spark.extensions.corpus import (
-    index_artifact,
-    index_db,
-)
+from astra_perseverance_spark.conformed.model import memo_frame, memo_value
+from astra_perseverance_spark.extensions.corpus import index_artifact
 from astra_perseverance_spark.extensions.corpus import vectors_frame as _vectors
 from astra_perseverance_spark.functions.ordering import (
     report_sort,
@@ -842,19 +839,11 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> count of indexed-side (even vec_id)
-# vectors, the scalar that sizes the incremental index's list count.
-_OLD_COUNT: dict[tuple, int] = {}
-
-
 def _n_indexed(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _OLD_COUNT:
-        _OLD_COUNT[key] = (
-            _vectors(spark, sf_dir)
-            .filter(F.col("vec_id") % 2 == 0).count()
-        )
-    return _OLD_COUNT[key]
+    """Count of indexed-side (even vec_id) vectors, the scalar that
+    sizes the incremental index's list count."""
+    return memo_value(spark, sf_dir, ("n_indexed",), lambda: (
+        _vectors(spark, sf_dir).filter(F.col("vec_id") % 2 == 0).count()))
 
 
 def q_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1014,11 +1003,6 @@ def q_ann_recall_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivf_pq_topk_rows(spark, sf_dir))
 
 
-# (applicationId, sf_dir) → per-dimension (lo, hi) over the INDEXED
-# (even vec_id) corpus — the incremental store's frozen metadata.
-_EVEN_DIM_STATS: dict[tuple, tuple[list, list]] = {}
-
-
 def _even_dim_stats(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     """(lo, hi) lists over the INDEXED (even vec_id) corpus only.
     Deliberately NOT ``training._dim_stats``: the quantized store's
@@ -1031,8 +1015,7 @@ def _even_dim_stats(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     as the docstrings have always claimed production would."""
     from astra_perseverance_spark.functions.vectors import ANN_DIM
 
-    key = (spark.sparkContext.applicationId, sf_dir, index_db())
-    if key not in _EVEN_DIM_STATS:
+    def build() -> tuple[list, list]:
         art = index_artifact(spark, "ann_sq_bounds")
         if art is None:
             art = (
@@ -1048,8 +1031,9 @@ def _even_dim_stats(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
         for r in rows:
             lo[r["d"]] = r["lo"]
             hi[r["d"]] = r["hi"]
-        _EVEN_DIM_STATS[key] = (lo, hi)
-    return _EVEN_DIM_STATS[key]
+        return lo, hi
+
+    return memo_value(spark, sf_dir, ("even_dim_stats",), build)
 
 
 def _even_dim_bounds(spark: SparkSession, sf_dir: str):

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from astra_perseverance_spark.conformed.model import _read
+from astra_perseverance_spark.conformed.model import _read, memo_value
 from astra_perseverance_spark.functions.asof import asof_backward
 
 
@@ -99,18 +99,11 @@ EVENTS_TARGET_ROWS_ENV = "SPARK_GRAFT_EVENTS_TARGET_ROWS"
 EVENTS_MIN_ROWS = 12_500
 EVENTS_TARGET_ROWS = 4_000_000
 
-# (applicationId, sf_dir, db) -> row count; driver scalar, memoized
-# like ``corpus.n_docs`` so consumers never re-run the count job.
-_EVT_COUNT: dict[tuple, int] = {}
-
-
 def n_events(spark: SparkSession, sf_dir: str) -> int:
-    from astra_perseverance_spark.extensions.corpus import bucketed_db
-
-    key = (spark.sparkContext.applicationId, sf_dir, bucketed_db())
-    if key not in _EVT_COUNT:
-        _EVT_COUNT[key] = _events_ns(spark, sf_dir).count()
-    return _EVT_COUNT[key]
+    """Event row count — a driver scalar, memoized like ``corpus.n_docs``
+    so consumers never re-run the count job."""
+    return memo_value(spark, sf_dir, ("n_events",),
+                      lambda: _events_ns(spark, sf_dir).count())
 
 
 def _events_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from astra_perseverance_spark.conformed.model import memo_frame, memo_value
 from astra_perseverance_spark.extensions.corpus import (
     clustered_docs as _cdocs,
     n_docs,
@@ -381,41 +382,32 @@ def seq_pack_layout(docs: DataFrame, shards: int) -> DataFrame:
 SQ_LEVELS = 255
 
 
-# (applicationId, sf_dir, bucketed_db) → per-dimension (lo, hi) over
-# the full quantized corpus — memoized like the sibling scalars
-# (corpus.n_vectors, similarity._even_dim_stats): the stats are
-# plan-time constants, and before the memo EVERY plan build of the
-# four consuming queries re-ran the aggregate + collect job (a
-# measured ~0.1–0.3 s of the timed bench region per build).
-_DIM_STATS: dict[tuple, tuple[list, list]] = {}
-
-
 def _dim_stats(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     """Per-dimension (lo, hi) over the quantized corpus — a 64-group
     aggregate (map-side partials; bytes, not rows, cross the shuffle)
     collected as 2x64 driver scalars, the same pipeline-config shape
     as ``corpus.n_vectors``.  At production scale these ship with the
     embedding store's metadata rather than being recomputed; here they
-    are memoized per (session, corpus, warehouse mode)."""
-    from astra_perseverance_spark.extensions.corpus import bucketed_db
+    are memoized per session, corpus and mode (``memo_value``): before
+    the memo EVERY plan build of the four consuming queries re-ran the
+    aggregate + collect job."""
 
-    key = (spark.sparkContext.applicationId, sf_dir, bucketed_db())
-    if key in _DIM_STATS:
-        return _DIM_STATS[key]
-    rows = (
-        vectors_frame(spark, sf_dir)
-        .select(F.posexplode("eq").alias("d", "q"))
-        .groupBy("d")
-        .agg(F.min("q").alias("lo"), F.max("q").alias("hi"))
-        .collect()
-    )
-    lo = [0] * ANN_DIM
-    hi = [0] * ANN_DIM
-    for r in rows:
-        lo[r["d"]] = r["lo"]
-        hi[r["d"]] = r["hi"]
-    _DIM_STATS[key] = (lo, hi)
-    return lo, hi
+    def build() -> tuple[list, list]:
+        rows = (
+            vectors_frame(spark, sf_dir)
+            .select(F.posexplode("eq").alias("d", "q"))
+            .groupBy("d")
+            .agg(F.min("q").alias("lo"), F.max("q").alias("hi"))
+            .collect()
+        )
+        lo = [0] * ANN_DIM
+        hi = [0] * ANN_DIM
+        for r in rows:
+            lo[r["d"]] = r["lo"]
+            hi[r["d"]] = r["hi"]
+        return lo, hi
+
+    return memo_value(spark, sf_dir, ("dim_stats",), build)
 
 
 def bounds_accessors(lo: list, hi: list):
@@ -905,8 +897,6 @@ def recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
             d, [], ["qh", "doc_id"], RECALL_PANEL_K, "doc_id"
         ).select("doc_id")
 
-    from astra_perseverance_spark.conformed.model import memo_frame
-
     return memo_frame(spark, sf_dir, ("dedup_recall_panel",), build)
 
 
@@ -1057,7 +1047,6 @@ def even_components_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted ``even_components`` table (``sinks.index_store``), so a
     fresh application inherits the anchors without re-walking the
     duplicate graph."""
-    from astra_perseverance_spark.conformed.model import memo_frame
     from astra_perseverance_spark.extensions.corpus import index_artifact
     from astra_perseverance_spark.extensions.dedup import (
         content_digest_frame,

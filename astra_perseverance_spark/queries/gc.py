@@ -24,50 +24,37 @@ from pyspark.sql import functions as F
 
 from astra_perseverance_spark.config import DEFAULT_CONFIG, EngineConfig
 from astra_perseverance_spark.conformed import load_model
-from astra_perseverance_spark.conformed.model import _session_key, memo_frame
+from astra_perseverance_spark.conformed.model import memo_frame
 from astra_perseverance_spark.functions.ordering import report_sorted
 from astra_perseverance_spark.functions.percentiles import GC_PCTS, nearest_rank_1based
 
 _PACK = 10_000_000_000  # pause_ms ≤ 10^6 ≪ pack base; epoch_sec < 10^10
 
-# The node-level histogram is the reduction every GC consumer starts
-# from (Q5's three rollup levels, Q19, the warnings P99 gate, Q20).
-# Its cardinality is bounded — nodes × distinct pause_ms — so caching
-# it is safe at any fact scale and collapses the raw-event scan to one.
-_HIST_CACHE: dict = {}
-
 
 def _node_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(dc, node, pause_ms) histogram with per-bucket ts extremes."""
-    key = _session_key(spark, sf_dir)
-    if key not in _HIST_CACHE:
+    """(dc, node, pause_ms) histogram with per-bucket ts extremes.
+
+    The reduction every GC consumer starts from (Q5's three rollup
+    levels, Q19, the warnings P99 gate, Q20).  Its cardinality is
+    bounded — nodes × distinct pause_ms — so caching it is safe at any
+    fact scale and collapses the raw-event scan to one."""
+
+    def build() -> DataFrame:
         gc = load_model(spark, sf_dir).gc_event
-        _HIST_CACHE[key] = gc.select(
+        return gc.select(
             "dc", "node", "pause_ms", F.col("ts").cast("long").alias("ep")
         ).groupBy("dc", "node", "pause_ms").agg(
             F.count("*").alias("cnt"),
             F.min("ep").alias("min_ep"),
             F.max("ep").alias("max_ep"),
-        ).cache()
-    return _HIST_CACHE[key]
+        )
+
+    return memo_frame(spark, sf_dir, ("gc_node_hist",), build)
 
 
 def q_gc_percentiles(spark: SparkSession, sf_dir: str,
                      cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Q5 — GROUPING SETS ((), (dc), (dc,node)) percentile blocks.
-
-    The result grain is 1 + #dc + #node rows, so the default-config
-    rollup is memoized: Q19, the warnings P99 gate, and Q20 all start
-    from this frame and would otherwise re-run the window pass each.
-    """
-    if cfg is DEFAULT_CONFIG:
-        return memo_frame(spark, sf_dir, ("gc_pct_rollup",),
-                          lambda: _build_gc_percentiles(spark, sf_dir))
-    return _build_gc_percentiles(spark, sf_dir)
-
-
-def _build_gc_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q5 plan builder (see ``q_gc_percentiles``).
 
     One shuffle off the cached node histogram: each (dc,node,pause_ms)
     bucket belongs to exactly three rollup groups — (dc,node), (dc),
@@ -78,6 +65,8 @@ def _build_gc_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning — no second exchange).  Everything stays inside
     whole-stage codegen; the exploded frame is 3× the *histogram*
     (bounded by nodes × distinct pause values), never the fact.
+    ``cfg`` is accepted for the report sinks' uniform call shape; no
+    threshold enters the rollup.
     """
     g = F.explode(F.array(
         F.struct(F.lit(2).alias("lvl"), F.col("dc").alias("gdc"),

@@ -4,15 +4,16 @@ Every declared query from SURVEY.md §2.10 (Q1–Q20) is registered here;
 each has a DuckDB oracle twin in ``oracle.sqls`` unless listed in
 ``NO_ORACLE`` (the driver then runs a rows-only check).
 
-Snapshot protocol (round-10, after two rounds of red snapshots): any
-commit that changes this registry, an oracle twin, or docs/ — and
-EVERY end-of-round snapshot — requires a green
-``python tools/preflight.py`` first (the Spark-free gate subset:
-plan-audit doc staleness, registry↔oracle key sync,
-bench-artifact freshness; ~5 s, no Spark session).  The full gate
-sequence is ``python tools/preflight.py --full`` (preflight +
-tools/check.py full-registry oracle parity + pytest).  A snapshot
-without a preflight pass is a protocol violation.
+Any change to this registry, an oracle twin, or docs/ needs a green
+``python tools/preflight.py`` (the Spark-free gate subset: plan-audit
+doc staleness, coverage-map currency, registry↔oracle key sync,
+bench-artifact freshness; no Spark session).  The full gate sequence
+is ``python tools/preflight.py --full`` (preflight + tools/check.py
+full-registry oracle parity + pytest).
+
+Each entry is the builder itself: every call constructs a fresh
+DataFrame.  What a session shares across queries is memoized below
+the builders, in ``conformed.model`` (``memo_frame``/``memo_value``).
 """
 
 from __future__ import annotations
@@ -170,53 +171,6 @@ QUERY_REGISTRY: dict[str, QueryFn] = {
     "gc_sessions": gc_stream.q_gc_sessions,
     "doc_minute_tokens": doc_stream.q_doc_minute_tokens,
 }
-
-def _plan_memoized(name: str, fn: QueryFn) -> QueryFn:
-    """Registry-wide plan memoization (optimization round 15).
-
-    Measured on the bench protocol (warm memos, best-of-N timed
-    ``_force(fn(spark, sf_dir))``): the py4j DataFrame *construction*
-    inside ``fn`` costs 0.3–1.2 s for the expression-heavy families
-    (64-dim vector math, winnowing windows, recall audits) — 30–60 %
-    of those queries' end-to-end seconds, all driver-side, none of it
-    execution.  The Q20 summary family has memoized its constructed
-    plan since round 6 for exactly this reason
-    (``conformed.model.memo_plan``); this wrapper extends that
-    established pattern to every registered query.
-
-    Semantics are unchanged: the memo key includes the session, the
-    sf_dir and both warehouse/index mode toggles (so a raw-mode plan
-    is never served to a bucketed session), ``release_memos`` drops
-    the entry with the frame memos (bench isolation keeps working:
-    the untimed warm run rebuilds the plan, timed runs reuse it), and
-    execution always re-plans physically against the CURRENT cache
-    state (a DataFrameWriter action builds a fresh QueryExecution per
-    run), so results and physical behavior are identical to calling
-    the raw fn — only the repeated driver-side reconstruction of the
-    same logical plan is skipped, exactly what a production engine's
-    plan cache does."""
-    import functools
-
-    from astra_perseverance_spark.conformed.model import memo_plan
-
-    @functools.wraps(fn)  # keeps __module__/__name__/__doc__: callers
-    def wrapped(spark: SparkSession, sf_dir: str, *rest) -> DataFrame:
-        # (tests, coverage tooling) classify queries by the builder's
-        # module.  A handful of parity queries also take an optional
-        # third cfg argument (the report/export sinks pass one, and
-        # ``export._call`` resolves arity through ``__wrapped__``) —
-        # a cfg-parameterized plan must NEVER be served from (or
-        # written to) the default-cfg memo slot, so that path calls
-        # the raw builder directly.
-        if rest:
-            return fn(spark, sf_dir, *rest)
-        return memo_plan(spark, sf_dir, ("registry", name),
-                         lambda: fn(spark, sf_dir))
-
-    return wrapped
-
-
-QUERY_REGISTRY = {n: _plan_memoized(n, f) for n, f in QUERY_REGISTRY.items()}
 
 # Queries with no SQL-expressible oracle (driver runs rows-only check).
 NO_ORACLE: frozenset[str] = frozenset()

@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 
 from astra_perseverance_spark.config import DEFAULT_CONFIG, EngineConfig
 from astra_perseverance_spark.conformed import load_model
-from astra_perseverance_spark.conformed.model import memo_frame
 from astra_perseverance_spark.queries import workload as W
 from astra_perseverance_spark.queries.warnings import q_warnings
 
@@ -71,25 +70,7 @@ def _collect_obj(df: DataFrame, group: list[str], entry: Column,
 
 def q_summary_json(spark: SparkSession, sf_dir: str,
                    cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """One row, one column ``summary_json`` — the canonical document.
-
-    The default-config RESULT frame is memoized (``memo_frame``, r7):
-    the document assembly is ~1 s of driver-side expression building
-    and its execution is ~100 AQE stage materializations over
-    topology-bounded grains — a fixed scheduling floor, profiled r7
-    (planning 0.16 s, execution 0.6 s, data-scale-independent, 0.48 s
-    with AQE off).  Caching the one-row document (the
-    ``corpus_curate`` memoized-ledger pattern) charges that floor to
-    the first build; a report run renders the same document several
-    times."""
-    if cfg is DEFAULT_CONFIG:
-        return memo_frame(spark, sf_dir, ("summary_json",),
-                          lambda: _build_summary_json(spark, sf_dir, cfg))
-    return _build_summary_json(spark, sf_dir, cfg)
-
-
-def _build_summary_json(spark: SparkSession, sf_dir: str,
-                        cfg: EngineConfig) -> DataFrame:
+    """One row, one column ``summary_json`` — the canonical document."""
     m = load_model(spark, sf_dir)
 
     # ---- workload section (memoized canonical grains) ----------------

@@ -232,21 +232,7 @@ def q_summary_long(spark: SparkSession, sf_dir: str,
                    cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Q20 — summary.json flattened to long format
     (section, ks, tbl, metric, value), explore.py:1718-1790, 1851-1854.
-    The nested-JSON rendering is a driver-side sink over these rows.
-    Default-config RESULT frame memoized (``memo_frame``, r7): the
-    report-grain output is a few hundred rows and its assembly cost
-    is AQE stage-scheduling floor, not data — see the profiling note
-    on ``summary.q_summary_json``."""
-    from astra_perseverance_spark.conformed.model import memo_frame
-
-    if cfg is DEFAULT_CONFIG:
-        return memo_frame(spark, sf_dir, ("summary_long",),
-                          lambda: _build_summary_long(spark, sf_dir, cfg))
-    return _build_summary_long(spark, sf_dir, cfg)
-
-
-def _build_summary_long(spark: SparkSession, sf_dir: str,
-                        cfg: EngineConfig) -> DataFrame:
+    The nested-JSON rendering is a driver-side sink over these rows."""
     ra, wa = reads_agg(spark, sf_dir, cfg), writes_agg(spark, sf_dir, cfg)
     r = ra.select(
         F.lit("workload_read").alias("section"), "ks", "tbl",

@@ -20,8 +20,14 @@ Each query is measured in isolation: shared memo frames are released
 first, one untimed warm run rebuilds the query's own memos and pays
 whole-stage-codegen compilation (a per-plan constant that vanishes at
 real data scale), then best-of-BENCH_REPEAT timed runs report the
-plan's execution cost.  Only the conformed-model cache stays warm
-across queries, as it would in a real deployment.
+query's cost.  Every registry call builds its DataFrame afresh, so a
+timed run includes the driver-side plan construction as well as the
+execution; for the expression-heavy families (64-dim vector math,
+winnowing windows, recall audits) that construction is a large share
+of the number, and timings recorded while the registry still memoized
+its plans are not comparable with later ones.  Only the
+conformed-model cache stays warm across queries, as it would in a
+real deployment.
 
 Each query also records a PLAN FINGERPRINT (round-7 advisory): a
 stable hash of its normalized optimized plan

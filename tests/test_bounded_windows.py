@@ -30,15 +30,9 @@ def test_declared_bounds_hold(spark, monkeypatch, name):
     from astra_perseverance_spark.queries import QUERY_REGISTRY
 
     monkeypatch.setenv(bounded.CHECK_ENV, "1")
-    # the declarations fire at plan CONSTRUCTION, which the registry's
-    # plan memo (r15) skips when another test already built this plan
-    # in the same session — drop the memos so the build runs armed,
-    # regardless of test order
-    from astra_perseverance_spark.conformed.model import release_memos
-
-    release_memos(spark)
     before = len(bounded.DECLARED)
-    # plan build runs the declarations (and, armed, the counts); the
+    # every registry call builds the plan afresh, so the build runs the
+    # declarations (and, armed, the counts) whatever ran before; the
     # collect proves the query itself still works with the check on
     rows = QUERY_REGISTRY[name](spark, SF_SMALL).collect()
     assert rows, name

@@ -33,61 +33,50 @@ def _query_names():
     return sorted(QUERY_REGISTRY)
 
 
-# The registry's plan memo: a per-(session, corpus, mode) cache that
-# ``release_memos`` fully drops, that cfg-parameterized calls bypass,
-# and that keeps each builder's module visible to the tooling.  They run
-# before the parity sweep below, so the memos it builds stay warm for the
-# test files after this one.
-
-
-def test_registry_plan_memo_contract(spark):
-    from astra_perseverance_spark.conformed.model import release_memos
-    from astra_perseverance_spark.queries import QUERY_REGISTRY
-
-    fn = QUERY_REGISTRY["token_count"]
-    release_memos(spark)
-    a = fn(spark, SF_SMALL)
-    b = fn(spark, SF_SMALL)
-    # memo hit: the SAME constructed DataFrame object, not a rebuild
-    assert a is b
-    # release_memos drops plan memos with the frame memos — the bench
-    # isolation protocol (warm run rebuilds, timed runs reuse)
-    release_memos(spark)
-    c = fn(spark, SF_SMALL)
-    assert c is not a
-    # results identical either way (memo returns the same plan the
-    # builder constructs)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, c.collect()))
-    release_memos(spark)
-
-
-def test_registry_cfg_calls_bypass_memo(spark):
-    """The report/export sinks call a handful of parity queries with a
-    third cfg argument; those calls must reach the raw builder (never
-    the default-cfg memo slot) and still work through the wrapper."""
-    from astra_perseverance_spark.conformed.model import release_memos
-    from astra_perseverance_spark.config import EngineConfig
-    from astra_perseverance_spark.queries import QUERY_REGISTRY
-
-    fn = QUERY_REGISTRY["workload_summary"]
-    release_memos(spark)
-    default = fn(spark, SF_SMALL)
-    with_cfg = fn(spark, SF_SMALL, EngineConfig())
-    assert with_cfg is not default  # bypassed the memo slot
-    assert fn(spark, SF_SMALL) is default  # memo undisturbed
-    assert sorted(default.columns) == sorted(with_cfg.columns)
-    release_memos(spark)
-
-
 def test_registry_wrapper_preserves_builder_identity():
     """Coverage/export tooling classifies queries by the builder's
-    module (``fn.__module__``); the memo wrapper must not mask it."""
-    from astra_perseverance_spark.queries import QUERY_REGISTRY
+    module (``fn.__module__``) and resolves arity from its signature;
+    the registry must hold each builder itself, not a wrapper."""
+    import importlib
 
-    assert QUERY_REGISTRY["token_count"].__module__.endswith(
-        "extensions.text_stats")
-    assert QUERY_REGISTRY["workload_reads"].__module__.endswith(
-        "queries.workload")
+    from astra_perseverance_spark.extensions import text_stats
+    from astra_perseverance_spark.queries import QUERY_REGISTRY, workload
+
+    assert QUERY_REGISTRY["token_count"] is text_stats.q_token_count
+    assert QUERY_REGISTRY["workload_reads"] is workload.q_workload_reads
+    for name, fn in QUERY_REGISTRY.items():
+        module = importlib.import_module(fn.__module__)
+        assert getattr(module, fn.__name__) is fn, name
+
+
+def test_release_memos_drops_every_session_entry(spark):
+    """One store holds what a session shares — frames and driver
+    scalars alike — and ``release_memos`` empties it: the cached GC
+    histogram is unpersisted and the corpus count is forgotten, not
+    left behind in a side store."""
+    from astra_perseverance_spark.conformed import model
+    from astra_perseverance_spark.queries import QUERY_REGISTRY
+    from astra_perseverance_spark.queries.gc import _node_hist
+
+    app_id = spark.sparkContext.applicationId
+
+    def entries():
+        return {k[-1]: v for k, v in model._FRAME_MEMO.items()
+                if k[0][0] == app_id}
+
+    QUERY_REGISTRY["gc_percentiles"](spark, SF_SMALL).collect()
+    QUERY_REGISTRY["dedup_simhash"](spark, SF_SMALL)  # reads n_docs
+    hist = _node_hist(spark, SF_SMALL)
+    assert hist.is_cached
+    held = entries()
+
+    assert model.release_memos(spark) >= len(held)
+    assert not hist.is_cached
+    assert entries() == {}
+    # both were entries of the one store that was just emptied
+    assert held.get(("gc_node_hist",)) is hist
+    assert isinstance(held.get(("n_docs",)), int)
+    assert _node_hist(spark, SF_SMALL) is not hist
 
 
 @pytest.mark.parametrize("name", _query_names())

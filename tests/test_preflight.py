@@ -110,3 +110,18 @@ def test_unreadable_artifacts_fail_cleanly(tmp_path):
     (tmp_path / "BENCH_DETAIL.json").write_text("{not json")
     fails = preflight.check_artifacts(str(tmp_path), live)
     assert len(fails) == 1 and "BENCH_DETAIL" in fails[0]
+
+
+def test_coverage_doc_is_current():
+    """docs/COVERAGE.md must equal what tools/coverage_map.py renders
+    for the live registry: its file:line citations move with every
+    builder edit, and a stale map points readers at the wrong code."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "coverage_map", os.path.join(repo, "tools", "coverage_map.py"))
+    coverage_map = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(coverage_map)
+    with open(os.path.join(repo, "docs", "COVERAGE.md")) as fh:
+        committed = fh.read()
+    assert committed == coverage_map.render(), (
+        "docs/COVERAGE.md is stale — re-run tools/coverage_map.py")

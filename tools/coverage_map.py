@@ -6,6 +6,9 @@ line-by-line coverage check (SURVEY.md §2.10 + extensions) a single
 place to look.
 
 Usage: python tools/coverage_map.py
+
+``render()`` returns the text without writing it; the test suite
+compares it with the committed file.
 """
 
 from __future__ import annotations
@@ -39,7 +42,8 @@ FAMILIES = [
 ]
 
 
-def main() -> int:
+def render() -> str:
+    """The text of docs/COVERAGE.md for the live registry."""
     from astra_perseverance_spark.oracle import ORACLE_SQL
     from astra_perseverance_spark.queries import QUERY_REGISTRY
 
@@ -55,7 +59,6 @@ def main() -> int:
     ]
     fam_of = dict(FAMILIES)
     for name, fn in QUERY_REGISTRY.items():
-        fn = inspect.unwrap(fn)  # the builder, not the registry's memo wrapper
         src = inspect.getsourcefile(fn)
         rel = os.path.relpath(src, REPO)
         line = inspect.getsourcelines(fn)[1]
@@ -67,12 +70,20 @@ def main() -> int:
     n = len(QUERY_REGISTRY)
     n_oracle = sum(1 for q in QUERY_REGISTRY if q in ORACLE_SQL)
     lines += ["", f"**{n} queries, {n_oracle} with oracle twins.**", ""]
+    return "\n".join(lines)
+
+
+def main() -> int:
+    from astra_perseverance_spark.oracle import ORACLE_SQL
+    from astra_perseverance_spark.queries import QUERY_REGISTRY
 
     dest = os.path.join(REPO, "docs", "COVERAGE.md")
     with open(dest, "w") as fh:
-        fh.write("\n".join(lines))
-    print(f"wrote {dest}: {n} queries, {n_oracle} oracles")
-    return 0 if n == n_oracle else 1
+        fh.write(render())
+    missing = sorted(set(QUERY_REGISTRY) - set(ORACLE_SQL))
+    print(f"wrote {dest}; queries without an oracle twin: "
+          f"{missing or 'none'}")
+    return 1 if missing else 0
 
 
 if __name__ == "__main__":

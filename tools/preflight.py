@@ -19,6 +19,8 @@ too late):
 3. BENCH_DETAIL.json freshness: it must cover exactly the live
    registry's queries and carry a ``run_context`` (the r9 lesson —
    the committed artifact was verbatim the previous round's file).
+4. docs/COVERAGE.md equals a fresh ``tools/coverage_map.py`` render
+   (tests/test_preflight.py::test_coverage_doc_is_current).
 
 A snapshot (end-of-round commit, or any commit that touches the
 registry, an oracle, or docs/) without a green preflight is a
@@ -46,6 +48,7 @@ PYTEST_TARGETS = [
     "test_fingerprint_normalizer_masks_per_session_tokens",
     "tests/test_oracle_parity.py::"
     "test_every_query_has_oracle_or_declared_exception",
+    "tests/test_preflight.py::test_coverage_doc_is_current",
 ]
 
 
